@@ -436,20 +436,19 @@ object Curation {
     // query; LogicalRDD seams make each stage's plan O(stage), the
     // same bytes end up in the block manager, and the work is
     // identical — each stage was materialized exactly once before too.
-    val qual = docs.join(
+    val qual = Rounds.truncate(docs.join(
       TextAnalysis.gopherRules(docs).filter(col("keep")).select(col("doc_id")),
-      "doc_id")
-      .localCheckpoint(false)
+      "doc_id"), eager = false)
     val pairs = pairFinder(qual.select(col("doc_id"), col("text")))
-    val deduped = qual.join(
-      pairs.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+    val deduped = Rounds.truncate(qual.join(
+      pairs.select(col("doc_b").as("doc_id")).distinct(), Seq("doc_id"),
+      "left_anti"), eager = false)
     val contam = Dedup.decontaminate(
       deduped.select(col("doc_id"), col("text")),
       benchmark.select(col("doc_id"), col("text")))
-    val clean = deduped.join(
-      contam.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+    val clean = Rounds.truncate(deduped.join(
+      contam.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"),
+      eager = false)
     (qual, deduped, clean, sequencePack(clean, budget))
   }
 
@@ -865,9 +864,9 @@ object Curation {
         concat(regexp_replace(col("w"), "(.)", "$1  "), lit("_")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
+    // no truncation: a round only re-projects the persisted vocab (one
+    // regexp_replace), so the plan stays shallow
+    Rounds.loop("bpe", rounds) { r =>
       val best = seg
         .withColumn("s", split(col("seg"), "  "))
         .select(col("freq"), explode(expr(
@@ -878,15 +877,15 @@ object Curation {
         .agg(sum(col("freq")).as("cnt"))
         .orderBy(col("cnt").desc, col("lhs"), col("rhs"))
         .limit(1).collect()
-      if (best.isEmpty) exhausted = true // every word fully merged
-      else {
+      // an empty pair table: every word is fully merged
+      best.isEmpty || {
         val (lhs, rhs, cnt) =
           (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
         merges += ((r, lhs, rhs, cnt))
         seg = seg.withColumn("seg", regexp_replace(col("seg"),
           "(?<!\\S)" + java.util.regex.Pattern.quote(s"$lhs  $rhs") + "(?!\\S)",
           java.util.regex.Matcher.quoteReplacement(lhs + rhs)))
-        r += 1
+        false
       }
     }
     (merges.toSeq, seg)
@@ -1703,6 +1702,20 @@ object Curation {
       .agg(sum(col("freq") * col("pe.e")).as("cnt"))
   }
 
+  /** The word-type table and its ≤ maxLen substring counts: the shared
+    * (lazily truncated) seams of both unigram-LM trainers. */
+  private def lmSeams(docs: DataFrame, maxLen: Int): (DataFrame, DataFrame) = {
+    val ty = Rounds.truncate(wordTypes(docs), eager = false)
+    val sub = Rounds.truncate(ty.select(col("freq"), explode(expr(
+        s"""flatten(transform(sequence(1, length(w)),
+           |  i -> filter(transform(sequence(1, $maxLen),
+           |    L -> CASE WHEN i + L - 1 <= length(w)
+           |         THEN substring(w, i, L) ELSE NULL END),
+           |    x -> x IS NOT NULL)))""".stripMargin)).as("g"))
+      .groupBy(col("g")).agg(sum(col("freq")).as("cnt")), eager = false)
+    (ty, sub)
+  }
+
   def unigramLmSoftTrain(docs: DataFrame, kMulti: Int = 40, maxLen: Int = 4,
       minCount: Long = 2L): DataFrame = {
     // r16 round 2: ty/sub/ec are SEAMS consumed by several downstream
@@ -1711,20 +1724,11 @@ object Curation {
     // re-analysis); as lazy localCheckpoints (the q75 curateStages
     // treatment) the same bytes materialize exactly once and every
     // consumer reads a LogicalRDD seam.
-    val ty = wordTypes(docs).localCheckpoint(false)
-    val sub = ty.select(col("freq"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)),
-           |  i -> filter(transform(sequence(1, $maxLen),
-           |    L -> CASE WHEN i + L - 1 <= length(w)
-           |         THEN substring(w, i, L) ELSE NULL END),
-           |    x -> x IS NOT NULL)))""".stripMargin)).as("g"))
-      .groupBy(col("g")).agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint(false)
+    val (ty, sub) = lmSeams(docs, maxLen)
     val seed = sub.filter(length(col("g")) === 1 || col("cnt") >= minCount)
     val pr = seed.crossJoin(broadcast(seed.agg(sum(col("cnt")).as("t"))))
       .select(col("g"), (col("cnt") * lit(1.0) / col("t")).as("p"))
-    val ec = softExpectedCounts(ty, pr, maxLen)
-      .localCheckpoint(false)
+    val ec = Rounds.truncate(softExpectedCounts(ty, pr, maxLen), eager = false)
     val fin = sub.filter(length(col("g")) === 1).select(col("g"))
       .unionByName(ec.filter(length(col("g")) > 1)
         .orderBy(col("cnt").desc, col("g")).limit(kMulti).select(col("g")))
@@ -1876,28 +1880,20 @@ object Curation {
     // consumer (48k-line explain at 2 rounds, growing with the
     // schedule, not the data); the seams keep job count identical and
     // truncate lineage the way the q57/q75 loops do.
-    val ty = wordTypes(docs).localCheckpoint(false)
-    val sub = ty.select(col("freq"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)),
-           |  i -> filter(transform(sequence(1, $maxLen),
-           |    L -> CASE WHEN i + L - 1 <= length(w)
-           |         THEN substring(w, i, L) ELSE NULL END),
-           |    x -> x IS NOT NULL)))""".stripMargin)).as("g"))
-      .groupBy(col("g")).agg(sum(col("freq")).as("cnt"))
-      .localCheckpoint(false)
+    val (ty, sub) = lmSeams(docs, maxLen)
     val chars = sub.filter(length(col("g")) === 1).select(col("g"))
     val seed = sub.filter(length(col("g")) === 1 || col("cnt") >= minCount)
     var pr = seed.crossJoin(broadcast(seed.agg(sum(col("cnt")).as("t"))))
       .select(col("g"), (col("cnt") * lit(1.0) / col("t")).as("p"))
     var fc: DataFrame = null
-    schedule.foreach { k =>
-      val ec = softExpectedCounts(ty, pr, maxLen)
-        .localCheckpoint(false)
+    // the seams are lazy and nothing in the loop reads a whole round, so
+    // no round is provably dead: nothing is released
+    Rounds.loop("unigram_em", schedule.length) { r =>
+      val ec = Rounds.truncate(softExpectedCounts(ty, pr, maxLen), eager = false)
       val fin = chars.unionByName(ec.filter(length(col("g")) > 1)
-        .orderBy(col("cnt").desc, col("g")).limit(k).select(col("g")))
-      fc = fin.join(ec, Seq("g"), "left")
-        .select(col("g"), coalesce(col("cnt"), lit(0L)).as("cnt"))
-        .localCheckpoint(false)
+        .orderBy(col("cnt").desc, col("g")).limit(schedule(r - 1)).select(col("g")))
+      fc = Rounds.truncate(fin.join(ec, Seq("g"), "left")
+        .select(col("g"), coalesce(col("cnt"), lit(0L)).as("cnt")), eager = false)
       // M-step: add-one-smoothed probabilities over the survivors feed
       // the NEXT round's lattice (exact integer operands, one IEEE
       // division — cross-engine identical)
@@ -1905,6 +1901,7 @@ object Curation {
           fc.agg(sum(col("cnt")).as("t"), count(lit(1)).as("nv"))))
         .select(col("g"),
           ((col("cnt") + lit(1L)) * lit(1.0) / (col("t") + col("nv"))).as("p"))
+      false
     }
     fc.crossJoin(broadcast(
         fc.agg(sum(col("cnt")).as("t"), count(lit(1)).as("nv"))))

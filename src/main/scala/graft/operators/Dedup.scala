@@ -500,173 +500,148 @@ object Dedup {
     */
   def dedupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // Pre-partition the loop-INVARIANT edge frame on the per-round join
-    // key (dst): the cached partitioning satisfies every iteration's
-    // join distribution, so only the tiny labels frame moves per round —
-    // at any scale the big side is exchanged exactly once, here.
-    // row-local explode, not a two-select union: the union form scans
-    // the (expensive, usually uncached) pair pipeline once per branch;
-    // the explode symmetrizes in a single pass
-    val edges = pairs.select(explode(array(
+    // key (dst): the checkpoint keeps the repartition(dst) output
+    // partitioning, so every round's dst-keyed join reads edges
+    // exchange-free — at any scale the big side is exchanged exactly
+    // once, here. Row-local explode, not a two-select union: the union
+    // form scans the (expensive, usually uncached) pair pipeline once
+    // per branch. Lazy truncation (r16): the pair-finder subtree is the
+    // plan's big constant and every round would re-analyze it.
+    val edges = Rounds.truncate(pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("dst"))
-      // r16: localCheckpoint (lazy), not persist — the pair-finder
-      // subtree above is the plan's big constant and the loop
-      // re-analyzes whatever lineage `edges` carries every round.
-      // LogicalRDD keeps the repartition(dst) output partitioning, so
-      // each round's dst-keyed join still serves edges exchange-free;
-      // blocks are freed explicitly once the result is materialized.
-      .localCheckpoint(false)
+      .repartition(col("dst")), eager = false)
     // init = identity fused with the first propagation round: label(id)
     // = min(id, min neighbor). Identical to one round from label=id, so
     // convergence needs one fewer iteration (each saved round is a
     // join+agg job — measurable when rounds are few).
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("label"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var converged = false
-    var iter = 0
     // labels only ever DECREASE (least of old and neighbor-min), so the
-    // fixpoint test is "Σlabel unchanged" — one narrow aggregate over the
-    // cached tiny frame per round instead of a self-join diff
+    // fixpoint test is "Σlabel unchanged" — one narrow aggregate per
+    // round instead of a self-join diff
     var labelSum = Option.empty[String]
-    while (!converged && iter < maxIters) {
+    val labels = Rounds.fixpoint("dedup_clusters", init, eager = false,
+        maxIters) { labels =>
       // one round = one join + one union-aggregate: neighbor labels flow
-      // src→dst-grouped messages, and unioning the previous labels into
-      // the min-aggregate replaces the old second (left) join — every
-      // node is present on the labels side, so nothing needs coalesce
-      val msgs = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
+      // along src→dst messages, and unioning the previous labels into
+      // the min-aggregate replaces a second (left) join — every node is
+      // present on the labels side, so nothing needs coalesce. Each round
+      // reads `labels` twice, so lazy truncation keeps the plan from
+      // doubling per round (q57's explain was 51k lines as a lazy
+      // persist, a growing share of each round Catalyst re-analysis).
+      edges.join(labels.withColumnRenamed("id", "dst"), "dst")
         .select(col("src").as("id"), col("label"))
-      // r16 (guide §5, the dedupClustersStars discipline): each round
-      // references `labels` TWICE (msgs join + union), so the lazy
-      // persist let the LOGICAL plan double per round — q57's explain
-      // hit 51k lines and a growing share of each round was Catalyst
-      // re-analysis, cost that scales with ROUNDS, not data. A LAZY
-      // localCheckpoint truncates lineage to a LogicalRDD per round
-      // (same per-round job count: the convergence-sum collect below
-      // materializes the blocks the cache used to hold); each dead
-      // round's blocks are freed explicitly right after the swap.
-      val updated = msgs.unionByName(labels)
+        .unionByName(labels)
         .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(false)
+    } { (_, next) =>
       // decimal accumulator: a Long sum could overflow (ANSI: throw) on
-      // billions of large ids; the comparison only needs equality. On an
-      // empty labels frame (clean corpus, no near-dup pairs) the global
-      // sum is NULL — treat as "0" so the loop converges to an empty
-      // result instead of NPEing.
-      val newSum = Option(updated
+      // billions of large ids; the comparison only needs equality. An
+      // empty frame (clean corpus) sums to NULL — read as "0" so the
+      // loop converges to an empty result instead of NPEing.
+      val newSum = Option(next
         .agg(sum(col("label").cast("decimal(38,0)"))).collect()(0).get(0))
         .map(_.toString).getOrElse("0")
-      labels.unpersist() // round-0 init persist; no-op on checkpoints
-      freeCheckpoint(labels) // a dead round's blocks are never re-read
-      labels = updated
-      converged = labelSum.contains(newSum)
+      val stop = labelSum.contains(newSum)
       labelSum = Some(newSum)
-      iter += 1
+      stop
     }
-    require(converged,
-      s"label propagation did not converge in $maxIters rounds — component " +
-        "diameter exceeds the bound; raise maxIters or use alternating stars")
-    // Materialize the result BEFORE releasing the iteration caches so the
-    // returned frame is self-contained: the caller gets exactly one
-    // persisted frame (the result itself) and releases it with
-    // `result.unpersist()` — nothing else leaks per call. The frame is
-    // small by construction (only docs that appear in a near-dup pair).
+    // Materialize the result BEFORE releasing the loop's frames so the
+    // caller gets exactly one persisted frame (the result itself) and
+    // releases it with `result.unpersist()`. Small by construction.
     val out = labels
       .select(col("id").as("doc_id"), col("label").as("cluster_id"),
         (col("id") === col("label")).as("keep"))
       .orderBy(col("doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count()
-    // `out` is fully materialized in cache, so the final round's and
-    // the edge frame's checkpoint blocks are dead — free them now (the
-    // standard localCheckpoint trade: re-reading `got` after the
-    // caller's final unpersist would need a recompute these blocks no
-    // longer back, same as dedupClustersStars).
-    freeCheckpoint(labels)
-    freeCheckpoint(edges)
+    Rounds.release(labels, edges)
     out
   }
-
-  /** Release the blocks behind a locally-checkpointed frame once it is
-    * provably dead (nothing will read it again). No-op for frames that
-    * are not checkpoint-backed.
-    */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    org.apache.spark.sql.GraftBridge.checkpointRdd(df)
-      .foreach(_.unpersist(false))
 
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC 2014) — the 100 TB upgrade of [[dedupClusters]]: O(log n)
     * rounds on ANY graph shape, including the pathological long chains
-    * where plain min-label propagation needs diameter rounds. Each round
-    * is two groupBy-join passes over the edge frame; edges only ever
-    * point "downhill" toward smaller ids, and at the fixpoint every node
-    * holds exactly one edge to its component minimum (a star).
-    *
-    * large-star: every node links its strictly-larger neighbors to the
-    * minimum of its closed neighborhood. small-star: orienting edges
-    * large→small, every node links its smaller neighbors (and itself) to
-    * that minimum. Both preserve connectivity; alternating them
-    * contracts any component to a star in logarithmic rounds.
+    * where plain min-label propagation needs diameter rounds. This is
+    * [[keyedStars]] over one subproblem (a constant key).
     *
     * Same result contract as [[dedupClusters]]: (doc_id, cluster_id,
     * keep), empty input → empty output, the RETURNED frame is persisted
-    * and materialized (release with `result.unpersist()`). Per-round
-    * edge frames are localCheckpoint'd (lineage must be truncated —
-    * each round references its input ~6 times, so plans would grow
-    * exponentially); their blocks are reclaimed by the ContextCleaner
-    * as the loop drops references, and on a cluster a lost executor
-    * fails the in-flight job (re-run) — the standard localCheckpoint
-    * trade every iterative graph algorithm on Spark makes (set a
-    * reliable checkpoint dir instead if executors are preemptible).
+    * and materialized (release with `result.unpersist()`).
     */
   def dedupClustersStars(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    var edges = pairs
-      .select(greatest(col("doc_a"), col("doc_b")).as("a"),
-        least(col("doc_a"), col("doc_b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val stars = keyedStars(pairs.select(lit(0L).as("x"), col("doc_a").as("a"),
+      col("doc_b").as("b")), maxIters)
+    val out = starLabels(stars)
+      .select(col("node").as("doc_id"), col("m").as("cluster_id"),
+        (col("node") === col("m")).as("keep"))
+      .orderBy(col("doc_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    Rounds.release(stars)
+    out
+  }
+
+  /** Keyed large-star/small-star contraction: connected components of
+    * MANY edge sets at once — `pairs` carries (x, a, b) rows meaning
+    * "edge {a, b} belongs to subproblem x", with the subproblem key
+    * joined into each groupBy/join. Returns the final star edges
+    * (x, a, b): every non-minimum node a of a component with one edge
+    * to its component minimum b ([[starLabels]] reads them out). State
+    * stays O(|pairs|) through every round — stars CONTRACT edges, they
+    * never materialize reachability pairs — and rounds are O(log n);
+    * this is what replaced the closure-doubling kernel of the
+    * articulation index after it went Σ|comp|³ on the sf0.1 chain graph
+    * (the round-6 lesson: doubling is for DISTANCE-like state you must
+    * enumerate — for "same component?" questions always contract).
+    *
+    * large-star: every node links its strictly-larger neighbors to the
+    * minimum of its closed neighborhood. small-star: orienting edges
+    * large→small, every node links its smaller neighbors (and itself)
+    * to that minimum. Both preserve connectivity; alternating them
+    * contracts any component to a star in logarithmic rounds. Each
+    * round references its input ~6 times, so rounds are truncated
+    * eagerly (the truncation is the round's materializing action).
+    */
+  private[operators] def keyedStars(pairs: DataFrame,
+      maxIters: Int = 30): DataFrame = {
+    val init = Rounds.truncate(pairs
+      .select(col("x"), greatest(col("a"), col("b")).as("a"),
+        least(col("a"), col("b")).as("b"))
+      .filter(col("a") =!= col("b")).distinct(), eager = true)
 
     def largeStar(e: DataFrame): DataFrame = {
-      val both = e.select(col("a").as("x"), col("b").as("y"))
-        .unionAll(e.select(col("b").as("x"), col("a").as("y")))
-      val mins = both.groupBy(col("x"))
-        .agg(min(col("y")).as("mn"))
-        .select(col("x"), least(col("mn"), col("x")).as("m"))
-      both.join(mins, "x").filter(col("y") > col("x"))
-        .select(col("y").as("a"), col("m").as("b"))
+      val both = e.select(col("x"), col("a").as("u"), col("b").as("v"))
+        .unionAll(e.select(col("x"), col("b").as("u"), col("a").as("v")))
+      val mins = both.groupBy(col("x"), col("u"))
+        .agg(min(col("v")).as("mn"))
+        .select(col("x"), col("u"), least(col("mn"), col("u")).as("m"))
+      both.join(mins, Seq("x", "u")).filter(col("v") > col("u"))
+        .select(col("x"), col("v").as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b")).distinct()
     }
 
     def smallStar(e: DataFrame): DataFrame = {
       // edges are kept oriented a > b, so grouping by a sees all
       // smaller neighbors; m = min neighbor (< a by orientation)
-      val mins = e.groupBy(col("a")).agg(min(col("b")).as("m"))
-      val linkNeighbors = e.join(mins, "a")
-        .select(col("b").as("n"), col("m"))
-      val linkSelf = mins.select(col("a").as("n"), col("m"))
+      val mins = e.groupBy(col("x"), col("a")).agg(min(col("b")).as("m"))
+      val linkNeighbors = e.join(mins, Seq("x", "a"))
+        .select(col("x"), col("b").as("n"), col("m"))
+      val linkSelf = mins.select(col("x"), col("a").as("n"), col("m"))
       linkNeighbors.unionAll(linkSelf)
         .filter(col("n") =!= col("m"))
-        .select(greatest(col("n"), col("m")).as("a"),
+        .select(col("x"), greatest(col("n"), col("m")).as("a"),
           least(col("n"), col("m")).as("b"))
         .distinct()
     }
 
-    var converged = false
-    var iter = 0
     var sig = Option.empty[(Long, String)]
-    while (!converged && iter < maxIters) {
-      // localCheckpoint (not persist): one round references its input
-      // frame ~6 times, so the LOGICAL plan would grow ~6× per round and
-      // the analyzer — not the data — becomes the bottleneck after a
-      // handful of iterations. Checkpointing truncates lineage each
-      // round; eager=true materializes it as this round's action.
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+    Rounds.fixpoint("stars", init, eager = true, maxIters)(
+        e => smallStar(largeStar(e))) { (prev, next) =>
       // fixpoint = identical edge set; (count, Σhash) over the canonical
       // oriented-distinct frame screens for it (decimal sum: overflow-
       // safe under ANSI at any edge count). The signature alone is
@@ -678,29 +653,26 @@ object Dedup {
       // unequal sets), so the exact join runs once per call, not per
       // round.
       val row = next.agg(count(lit(1)),
-        sum(hash(col("a"), col("b")).cast("decimal(38,0)"))).head()
+        sum(hash(col("x"), col("a"), col("b")).cast("decimal(38,0)"))).head()
       val newSig = (row.getLong(0),
         Option(row.get(1)).map(_.toString).getOrElse("0"))
-      converged = sig.contains(newSig) && next.exceptAll(edges).isEmpty
-      edges.unpersist()
-      edges = next
+      val stop = sig.contains(newSig) && next.exceptAll(prev).isEmpty
       sig = Some(newSig)
-      iter += 1
+      stop
     }
-    require(converged,
-      s"star contraction did not converge in $maxIters rounds")
-    val children = edges.select(col("a").as("doc_id"), col("b").as("cluster_id"))
-    val roots = edges.select(col("b").as("doc_id")).distinct()
-      .join(children.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-    val out = children.unionByName(roots)
-      .select(col("doc_id"), col("cluster_id"),
-        (col("doc_id") === col("cluster_id")).as("keep"))
-      .orderBy(col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    edges.unpersist()
-    out
+  }
+
+  /** (x, node, m) component labels of [[keyedStars]]' final edges:
+    * every node carrying an edge in subproblem x, labelled with its
+    * component minimum (the minimum labels itself).
+    */
+  private[operators] def starLabels(stars: DataFrame): DataFrame = {
+    val children = stars.select(col("x"), col("a").as("node"), col("b").as("m"))
+    val roots = stars.select(col("x"), col("b").as("node")).distinct()
+      .join(children.select(col("x"), col("node")), Seq("x", "node"),
+        "left_anti")
+      .select(col("x"), col("node"), col("node").as("m"))
+    children.unionByName(roots)
   }
 
   /** q57: dedup clusters over the exact near-dup pairs. The oracle

@@ -30,29 +30,6 @@ object Graph {
       q156, q157, q159, q176, q177, q178, q181, q183, q194, q199, q208,
       q218, q222, q223, q224, q233, q254)
 
-  /** Rounds-to-fixpoint ledger for the data-dependent iterative
-    * operators whose DuckDB oracles are FIXED generous unrolls (q132
-    * k-core: 12, q137 coreness: 32, q177/q222 betweenness BFS: 6
-    * layers). The generous-unroll equality argument is only sound while
-    * the measured fixpoint stays at or under the unroll — this ledger
-    * makes the margin an ASSERTED invariant (UnrollMarginSpec checks it
-    * at both oracle gate scales) instead of a comment, so corpus drift
-    * that pushes a fixpoint past its unroll fails the suite loudly
-    * before it can silently widen into an oracle mismatch.
-    */
-  val lastRounds =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
-
-  /** Materialize-and-release helper for the cache contract above. */
-  private def finish(out: DataFrame, release: Boolean,
-      cached: DataFrame*): DataFrame =
-    if (!release) out
-    else {
-      val pinned = out.localCheckpoint(true)
-      cached.foreach(_.unpersist())
-      pinned
-    }
-
   /** Fixed-iteration PageRank over a directed edge list (`src`, `dst`),
     * damping 0.85, ranks kept in parts-per-billion BIGINTs: the initial
     * rank is 1e9 div N, each round every node sends `r div outdeg`
@@ -108,33 +85,37 @@ object Graph {
         org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
       .sortWithinPartitions(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK) // reused every iteration
+    Rounds.finish(pageRankRounds(withDeg, iterations), release, withDeg)
+  }
+
+  /** The integer-grid PageRank rounds over a (src, dst, outdeg) edge
+    * frame — shared by [[pageRank]] and [[pageRankBucketed]], so the
+    * two layouts run bit-identical arithmetic by construction.
+    */
+  private def pageRankRounds(withDeg: DataFrame, iterations: Int): DataFrame = {
     val nodes = withDeg.select(col("src")).distinct()
     val nFrame = nodes.agg(count(lit(1)).as("n_nodes"))
     var rank = nodes.crossJoin(broadcast(nFrame))
       .selectExpr("src AS node", "CAST(1000000000 div n_nodes AS LONG) AS r")
-    for (it <- 1 to iterations) {
-      rank =
+    Rounds.loop("pagerank", iterations) { it =>
+      val contribs =
         if (it == 1)
           // r15 first-round shortcut: the uniform init is the SAME
           // constant 1e9 div n for every node, so round 1's join
           // against it collapses to a scan + keyed agg — identical
           // integer arithmetic ((1e9 div n) div outdeg per edge),
           // zero joins, certified by the unchanged unrolled oracle
-          withDeg.crossJoin(broadcast(nFrame))
-            .selectExpr("dst",
-              "CAST(1000000000 div n_nodes AS LONG) div outdeg AS contrib")
-            .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-            .crossJoin(broadcast(nFrame))
-            .selectExpr("dst AS node",
-              "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
+          withDeg.crossJoin(broadcast(nFrame)).selectExpr("dst",
+            "CAST(1000000000 div n_nodes AS LONG) div outdeg AS contrib")
         else withDeg.join(rank, withDeg("src") === rank("node"))
           .selectExpr("dst", "r div outdeg AS contrib")
-          .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-          .crossJoin(broadcast(nFrame))
-          .selectExpr("dst AS node",
-            "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
+      rank = contribs.groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
+        .crossJoin(broadcast(nFrame))
+        .selectExpr("dst AS node",
+          "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
+      false
     }
-    finish(rank, release, withDeg)
+    rank
   }
 
   /** q110: 3-iteration PageRank on the symmetrized customer–supplier
@@ -252,34 +233,8 @@ object Graph {
       .bucketBy(numBuckets, "src")
       .sortBy("src")
       .saveAsTable(table)
-    val withDeg = s.table(table) // (src, dst, outdeg), bucketed on src
-    val nFrame = withDeg.select(col("src")).distinct()
-      .agg(count(lit(1)).as("n_nodes"))
-    var rank = withDeg.select(col("src")).distinct()
-      .crossJoin(broadcast(nFrame))
-      .selectExpr("src AS node", "CAST(1000000000 div n_nodes AS LONG) AS r")
-    for (it <- 1 to iterations) {
-      rank =
-        if (it == 1)
-          // same r15 first-round shortcut as pageRank: uniform init is
-          // one constant, so round 1 is a bucketed scan + keyed agg
-          withDeg.crossJoin(broadcast(nFrame))
-            .selectExpr("dst",
-              "CAST(1000000000 div n_nodes AS LONG) div outdeg AS contrib")
-            .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-            .crossJoin(broadcast(nFrame))
-            .selectExpr("dst AS node",
-              "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
-        else withDeg.join(rank, withDeg("src") === rank("node"))
-          .selectExpr("dst", "r div outdeg AS contrib")
-          .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
-          .crossJoin(broadcast(nFrame))
-          .selectExpr("dst AS node",
-            "CAST(150000000 div n_nodes + (85 * s) div 100 AS LONG) AS r")
-    }
-    rank
+    pageRankRounds(s.table(table), iterations) // (src, dst, outdeg), bucketed on src
   }
-
 
   /** q133: q110's PageRank over the bucketed edge layout — same graph,
     * same oracle SQL, bit-identical ranks; what changes is the PLAN
@@ -345,15 +300,16 @@ object Graph {
         .selectExpr("node", "CAST(1000000000 div n_seeds AS LONG) AS r0"),
         Seq("node"), "left")
       .selectExpr("node", "coalesce(r0, CAST(0 AS LONG)) AS r")
-    for (_ <- 1 to iterations) {
+    Rounds.loop("personalized_pagerank", iterations) { _ =>
       rank = withDeg.join(rank, withDeg("src") === rank("node"))
         .selectExpr("dst", "r div outdeg AS contrib")
         .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
         .join(broadcast(tele), col("dst") === tele("node"), "left")
         .selectExpr("dst AS node",
           "CAST(coalesce(tele, CAST(0 AS LONG)) + (85 * s) div 100 AS LONG) AS r")
+      false
     }
-    finish(rank, release, withDeg, seedSet)
+    Rounds.finish(rank, release, withDeg, seedSet)
   }
 
   /** q126: proximity to the first ten customers on the trade graph —
@@ -460,7 +416,7 @@ object Graph {
     val base = baseNodes.join(seedLabels, Seq("node"), "left")
       .persist(StorageLevel.MEMORY_AND_DISK)
     var state = base.select(col("node"), col("seed_label").as("label"))
-    for (_ <- 1 to rounds) {
+    Rounds.loop("label_propagation", rounds) { _ =>
       val votes = edges
         .join(state.select(col("node").as("src"), col("label").as("nl")), "src")
         .filter(col("nl").isNotNull)
@@ -474,8 +430,9 @@ object Graph {
         .select(col("dst").as("node"), col("nl").as("prop"))
       state = base.join(win, Seq("node"), "left")
         .select(col("node"), coalesce(col("seed_label"), col("prop")).as("label"))
+      false
     }
-    finish(state, release, edges, base)
+    Rounds.finish(state, release, edges, base)
   }
 
   /** Exact all-pairs cosine similarity edges — the TRUTH-ONLY edge
@@ -590,7 +547,7 @@ object Graph {
       .select(col("ia"), col("ib"))
     val out = pairs.select(col("ia").as("src"), col("ib").as("dst"))
       .unionByName(pairs.select(col("ib").as("src"), col("ia").as("dst")))
-    finish(out, release, vecs, banded)
+    Rounds.finish(out, release, vecs, banded)
   }
 
   /** Label spreading over a similarity graph built from an embedding
@@ -716,7 +673,7 @@ object Graph {
     val counts = triangles
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
-    finish(counts, release, ranked)
+    Rounds.finish(counts, release, ranked)
   }
 
   /** q128: per-node triangle counts on the co-purchase projection —
@@ -849,7 +806,7 @@ object Graph {
         (col("da") + col("db") - col("shared")).as("unions"),
         round(lit(1000000.0) * col("shared") /
           (col("da") + col("db") - col("shared"))).cast("long").as("jaccard_ppm"))
-    finish(out, release, und)
+    Rounds.finish(out, release, und)
   }
 
   /** k-core extraction by min-degree peeling: repeatedly delete every
@@ -860,49 +817,40 @@ object Graph {
     * core's nodes with their in-core degree (all ≥ k).
     *
     * The round count is DATA-DEPENDENT (a chain peels one layer per
-    * round), so this uses the dedupClustersStars convergence treatment,
-    * not a fixed unroll: each round's induced edge frame is
-    * `localCheckpoint(true)` — one round references only the previous
-    * round's materialized RDD, keeping lineage depth constant — and the
-    * driver's convergence check is one count() per round on that
-    * checkpointed frame. Per round: one degree agg + two semi-join
-    * shapes on node keys, all shuffles on the node id. Rounds are
-    * bounded by the graph's degeneracy ordering depth (≤ node count,
-    * in practice O(peeled layers) — 9–11 on the catalog corpus).
+    * round): each round's induced edge frame is truncated eagerly
+    * (Rounds) and the convergence check is one count() on it. Per
+    * round: one degree agg + two semi-join shapes on node keys, all
+    * shuffles on the node id. Rounds are bounded by the graph's
+    * degeneracy ordering depth (≤ node count, in practice O(peeled
+    * layers) — 9–11 on the catalog corpus); the ledger key `kcore`
+    * records them.
     */
   def kCore(undirected: DataFrame, k: Long): DataFrame = {
-    // (r16 note: lazy checkpoints were A/B'd here and in coreness and
-    // measured SLOWER — the fused count-plus-pipeline job planned its
-    // joins without materialized-size stats — so these loops keep the
-    // eager per-round checkpoint, unlike kTrussPeel/betweenness where
-    // lazy measured faster.)
-    var edges = undirected.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    var prev = -1L
-    var n = edges.count()
-    var peels = 0
-    while (n != prev) {
-      prev = n
-      peels += 1
-      // persisted: keep feeds BOTH join sides — unpersisted, the degree
-      // aggregation would plan (and execute) twice per round. Released
-      // as soon as the round's checkpoint has materialized through it.
-      val keep = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+    val init = Rounds.truncate(
+      undirected.select(col("src"), col("dst")).distinct(), eager = true)
+    var n = init.count()
+    // keep feeds BOTH join sides: persisted, or the degree aggregation
+    // would plan (and execute) twice per round; released once the
+    // round's checkpoint has materialized through it. Semi joins, not
+    // inner: a checkpoint inherits its plan's size ESTIMATE, and an
+    // inner join estimates the product of its sides — edges × keep ×
+    // keep cubed the estimate every round, a BigInt whose digits grew
+    // 3× per round until planning alone took minutes past ~12 peels.
+    // A semi join estimates its left side, so the estimate stays flat.
+    var keep: DataFrame = null
+    val edges = Rounds.fixpoint("kcore", init, eager = true) { edges =>
+      keep = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("node"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      edges = edges
-        .join(keep.withColumnRenamed("node", "src"), Seq("src"))
-        .join(keep.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      n = edges.count()
-      keep.unpersist()
+      edges
+        .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
+    } { (_, next) =>
+      val prev = n
+      n = next.count()
+      Rounds.release(keep)
+      n == prev
     }
-    // peels counted the final no-change verification iteration too;
-    // the ledger records EFFECTIVE rounds (iterations that changed the
-    // edge set) — the number an unrolled oracle replay must dominate —
-    // matching betweenness_depth's counting convention.
-    lastRounds.put("kcore", peels - 1)
     edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
   }
 
@@ -934,34 +882,24 @@ object Graph {
     * row, matching [[kCore]]'s convention.
     */
   def coreness(undirected: DataFrame): DataFrame = {
-    val edges = undirected.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    var core = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      val byNode = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("src")).orderBy(col("nc").desc)
-      val next = edges
+    val edges = Rounds.truncate(
+      undirected.select(col("src"), col("dst")).distinct(), eager = true)
+    val init = Rounds.truncate(edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("core")), eager = true)
+    val byNode = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("src")).orderBy(col("nc").desc)
+    Rounds.fixpoint("coreness", init, eager = true) { core =>
+      edges
         .join(core.select(col("node").as("dst"), col("core").as("nc")),
           Seq("dst"))
         .select(col("src"), col("nc"))
         .withColumn("rn", row_number().over(byNode))
         .groupBy(col("src").as("node"))
         .agg(max(least(col("nc"), col("rn"))).as("core"))
-        .localCheckpoint(true)
-      changed = next
-        .join(core.withColumnRenamed("core", "prev"), Seq("node"))
-        .filter(col("core") =!= col("prev")).count()
-      core = next
-      rounds += 1
+    } { (core, next) =>
+      next.join(core.withColumnRenamed("core", "prev"), Seq("node"))
+        .filter(col("core") =!= col("prev")).count() == 0
     }
-    // effective rounds only (the last iteration verified changed == 0)
-    // — same convention as the kcore and betweenness_depth ledger keys
-    lastRounds.put("coreness", rounds - 1)
-    core
   }
 
   /** k-truss: the maximal subgraph in which every EDGE participates in
@@ -1041,8 +979,6 @@ object Graph {
     require(k >= 3L, s"k-truss needs k >= 3, got $k")
     var tri = triIndex
     var edges = e0
-    var removedN = 1L
-    var round = 0
     // support of the given edge frame against the current alive triangles
     def peelOnce(es: DataFrame): DataFrame = {
       val sup = tri.select(explode(array(
@@ -1055,8 +991,10 @@ object Graph {
         .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
         .select(col("lo"), col("hi"))
     }
-    while (removedN > 0) {
-      round += 1
+    // Nothing is released here: a round's only action counts `removed`,
+    // which reads `kept` through the anti-join alone, so no action is
+    // known to read every partition of `kept` (the Rounds release rule).
+    Rounds.loop("ktruss", Int.MaxValue) { round =>
       // TWO peels per materialization: the second reads support against
       // the triangles alive BEFORE the first peel's removals — an
       // overestimate, so it can only DELAY a removal to the next pair,
@@ -1064,13 +1002,12 @@ object Graph {
       // termination (a pair removing nothing) implies the first,
       // exact-state peel removed nothing. Halves the per-peel
       // checkpoint+count jobs, the dominant loop cost at catalog scale.
-      // r16: LAZY checkpoints — the removed.count() action materializes
-      // kept and removed in ONE job (they were two eager checkpoint
-      // jobs + a count per round); lineage truncation is identical.
-      val kept = peelOnce(peelOnce(edges)).localCheckpoint(false)
-      val removed = edges.join(kept, Seq("lo", "hi"), "left_anti")
-        .localCheckpoint(false)
-      removedN = removed.count()
+      // Lazy truncation (r16): the removed.count() action materializes
+      // kept and removed in ONE job.
+      val kept = Rounds.truncate(peelOnce(peelOnce(edges)), eager = false)
+      val removed = Rounds.truncate(
+        edges.join(kept, Seq("lo", "hi"), "left_anti"), eager = false)
+      val removedN = removed.count()
       edges = kept
       if (removedN > 0) {
         // removedN is an exact count: broadcast the pruning side when it
@@ -1085,12 +1022,13 @@ object Graph {
             Seq("l3", "h3"), "left_anti")
         // broadcast anti-joins are map-side, so tri can stay LAZY —
         // each round's support scan replays the accumulated prunes as
-        // hash probes over the last checkpoint. Checkpoint every few
-        // rounds to bound plan depth (and drop spent broadcasts), not
-        // every round: the eager per-round materialization was the
-        // dominant cost of the whole loop at catalog scale.
-        if (round % 2 == 0) tri = tri.localCheckpoint(true)
+        // hash probes over the last checkpoint. Truncate every other
+        // round to bound plan depth (and drop spent broadcasts): the
+        // eager per-round materialization was the dominant cost of the
+        // whole loop at catalog scale.
+        if (round % 2 == 0) tri = Rounds.truncate(tri, eager = true)
       }
+      removedN == 0
     }
     edges
   }
@@ -1136,7 +1074,7 @@ object Graph {
     var out = walk.select(col("start"), lit(0L).as("step"),
       col("cur").as("node"))
     val steps = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (t <- 1 to walkLen) {
+    Rounds.loop("random_walks", walkLen) { t =>
       val pick = pmod(
         conv(substring(md5(concat(lit(s"walk:$seed:"),
           col("start").cast("string"), lit(s":$t:"),
@@ -1154,8 +1092,9 @@ object Graph {
       steps += walk
       out = out.unionByName(walk.select(col("start"),
         lit(t.toLong).as("step"), col("cur").as("node")))
+      false
     }
-    finish(out, release, (steps :+ deg :+ nbr).toSeq: _*)
+    Rounds.finish(out, release, (steps :+ deg :+ nbr).toSeq: _*)
   }
 
   /** q142: length-5 walk corpus over the q129 shared-customer supplier
@@ -1231,21 +1170,23 @@ object Graph {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
     val edges = undirected.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = landmarks.select(col("lm"), col("lm").as("node"),
-        lit(0L).as("dist"))
-      .localCheckpoint(true)
+    var dist = Rounds.truncate(landmarks.select(col("lm"), col("lm").as("node"),
+        lit(0L).as("dist")), eager = true)
     var frontier = dist.select(col("lm"), col("node"))
-    for (t <- 1 to maxDepth) {
+    // every layer stays in `dist`: nothing is released
+    Rounds.loop("bfs_distances", maxDepth) { t =>
       val expanded = frontier
         .join(edges, col("node") === col("src"))
         .select(col("lm"), col("dst").as("node")).distinct()
-      val novel = expanded.join(dist, Seq("lm", "node"), "left_anti")
-        .select(col("lm"), col("node"), lit(t.toLong).as("dist"))
-        .localCheckpoint(true)
+      val novel = Rounds.truncate(
+        expanded.join(dist, Seq("lm", "node"), "left_anti")
+          .select(col("lm"), col("node"), lit(t.toLong).as("dist")),
+        eager = true)
       dist = dist.unionByName(novel)
       frontier = novel.select(col("lm"), col("node"))
+      false
     }
-    finish(dist, release, edges)
+    Rounds.finish(dist, release, edges)
   }
 
   /** q144: hop distances from the three lowest-id vectors over the
@@ -1645,72 +1586,69 @@ object Graph {
     * [[kCore]] convention; isolated nodes carry no rows).
     */
   def stronglyConnectedComponents(edges0: DataFrame): DataFrame = {
-    var edges = edges0.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
+    var edges = Rounds.truncate(
+      edges0.select(col("src"), col("dst")).distinct(), eager = true)
+    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    Rounds.loop("scc", Int.MaxValue) { _ =>
+      edges.count() == 0 || {
+        val nodes = Rounds.truncate(edges.select(col("src").as("node"))
+          .union(edges.select(col("dst").as("node"))).distinct(), eager = true)
+        // 1. forward max-color fixpoint; `prev` is the previous round's
+        // color, so a round that changes no color is the fixpoint
+        val colored = Rounds.fixpoint("scc_color",
+            Rounds.truncate(nodes.withColumn("color", col("node")), eager = true),
+            eager = true) { c =>
+          val pushed = edges
+            .join(c.select(col("node").as("src"), col("color").as("c")),
+              Seq("src"))
+            .groupBy(col("dst").as("node")).agg(max(col("c")).as("in_max"))
+          c.select(col("node"), col("color").as("prev"))
+            .join(pushed, Seq("node"), "left")
+            .select(col("node"), col("prev"),
+              greatest(col("prev"), coalesce(col("in_max"), col("prev")))
+                .as("color"))
+        } { (_, next) => next.filter(col("color") =!= col("prev")).count() == 0 }
+        val color = colored.select(col("node"), col("color"))
+        // 2. backward claim from all roots at once, within color classes
+        val claimed = Rounds.fixpoint("scc_claim",
+            Rounds.truncate(color.filter(col("color") === col("node"))
+              .select(col("node"), col("color")), eager = true),
+            eager = true) { claimed =>
+          val step = edges
+            .join(claimed.select(col("node").as("dst"), col("color").as("cc")),
+              Seq("dst"))
+            .select(col("src").as("node"), col("cc")).distinct()
+          val cand = step.join(color, Seq("node"))
+            .filter(col("color") === col("cc"))
+            .select(col("node"), col("color"))
+          claimed.union(cand).distinct()
+        } { (prev, next) => prev.count() == next.count() }
+        // scc_id = min member id within each claimed color class
+        val ids = claimed.groupBy(col("color")).agg(min(col("node")).as("scc_id"))
+        val assigned = Rounds.truncate(claimed.join(ids, Seq("color"))
+          .select(col("node"), col("scc_id")), eager = true)
+        // 3. drop claimed nodes; edge-stripped leftovers are singletons
+        val done = assigned.select(col("node"))
+        val residue = Rounds.truncate(edges
+          .join(done.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
+          .join(done.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti"),
+          eager = true)
+        val still = residue.select(col("src").as("node"))
+          .union(residue.select(col("dst").as("node"))).distinct()
+        val orphans = Rounds.truncate(nodes.join(done, Seq("node"), "left_anti")
+          .join(still, Seq("node"), "left_anti")
+          .select(col("node"), col("node").as("scc_id")), eager = true)
+        parts += assigned += orphans
+        Rounds.release(edges, nodes, colored, claimed)
+        edges = residue
+        false
+      }
+    }
     // empty input = empty result with the output schema, not null (the
     // sccByClosure convention — the two documented-equivalent paths
     // must agree on every input)
-    var result: DataFrame = edges
-      .select(col("src").as("node"), col("src").as("scc_id"))
-      .limit(0)
-    var remaining = edges.count()
-    while (remaining > 0) {
-      val nodes = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-        .localCheckpoint(true)
-      // 1. forward max-color fixpoint
-      var color = nodes.withColumn("color", col("node")).localCheckpoint(true)
-      var changed = 1L
-      while (changed > 0) {
-        val pushed = edges
-          .join(color.select(col("node").as("src"), col("color").as("c")),
-            Seq("src"))
-          .groupBy(col("dst").as("node")).agg(max(col("c")).as("in_max"))
-        val next = color.withColumnRenamed("color", "prev")
-          .join(pushed, Seq("node"), "left")
-          .select(col("node"), col("prev"),
-            greatest(col("prev"), coalesce(col("in_max"), col("prev")))
-              .as("color"))
-          .localCheckpoint(true)
-        changed = next.filter(col("color") =!= col("prev")).count()
-        color = next.select(col("node"), col("color"))
-      }
-      // 2. backward claim from all roots at once, within color classes
-      var claimed = color.filter(col("color") === col("node"))
-        .select(col("node"), col("color")).localCheckpoint(true)
-      changed = 1L
-      while (changed > 0) {
-        val before = claimed.count()
-        val step = edges
-          .join(claimed.select(col("node").as("dst"), col("color").as("cc")),
-            Seq("dst"))
-          .select(col("src").as("node"), col("cc")).distinct()
-        val cand = step.join(color, Seq("node"))
-          .filter(col("color") === col("cc"))
-          .select(col("node"), col("color"))
-        claimed = claimed.union(cand).distinct().localCheckpoint(true)
-        changed = claimed.count() - before
-      }
-      // scc_id = min member id within each claimed color class
-      val ids = claimed.groupBy(col("color")).agg(min(col("node")).as("scc_id"))
-      val assigned = claimed.join(ids, Seq("color"))
-        .select(col("node"), col("scc_id")).localCheckpoint(true)
-      result = result.union(assigned)
-      // 3. drop claimed nodes; edge-stripped leftovers are singletons
-      val done = assigned.select(col("node"))
-      edges = edges
-        .join(done.withColumnRenamed("node", "src"), Seq("src"), "left_anti")
-        .join(done.withColumnRenamed("node", "dst"), Seq("dst"), "left_anti")
-        .localCheckpoint(true)
-      remaining = edges.count()
-      val still = edges.select(col("src").as("node"))
-        .union(edges.select(col("dst").as("node"))).distinct()
-      val orphans = nodes.join(done, Seq("node"), "left_anti")
-        .join(still, Seq("node"), "left_anti")
-        .select(col("node"), col("node").as("scc_id")).localCheckpoint(true)
-      result = result.union(orphans)
-    }
-    result
+    parts.reduceOption(_ union _).getOrElse(
+      edges.select(col("src").as("node"), col("src").as("scc_id")).limit(0))
   }
 
   /** SCC by closure DOUBLING — the fast exact path for graphs whose
@@ -1763,18 +1701,18 @@ object Graph {
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()
       .localCheckpoint(true)
-    var reach = edges.select(col("src").as("a"), col("dst").as("b"))
-      .localCheckpoint(true)
-    var size = reach.count()
-    var changed = 1L
-    while (changed > 0) {
+    val init = Rounds.truncate(
+      edges.select(col("src").as("a"), col("dst").as("b")), eager = true)
+    var size = init.count()
+    val reach = Rounds.fixpoint("closure", init, eager = true) { reach =>
       val step = reach.as("r1")
         .join(reach.as("r2"), col("r1.b") === col("r2.a"))
         .select(col("r1.a").as("a"), col("r2.b").as("b"))
-      reach = reach.union(step).distinct().localCheckpoint(true)
-      val after = reach.count()
-      changed = after - size
-      size = after
+      reach.union(step).distinct()
+    } { (_, next) =>
+      val before = size
+      size = next.count()
+      size == before
     }
     val mutual = reach.intersect(
       reach.select(col("b").as("a"), col("a").as("b")))
@@ -1940,39 +1878,8 @@ object Graph {
     // action per round), which re-running every bench pass charged to
     // the serving path — q178 measured a consistent ~2× its pin from
     // exactly this. One build per (graph, session), setup-itemized.
-    def buildLp(): DataFrame = {
-      val direct = edges0.select(col("src"), col("dst")).distinct()
-      val lifted = direct
-        .join(broadcast(scc.select(col("node").as("src"), col("scc_id").as("sa"))),
-          Seq("src"))
-        .join(broadcast(scc.select(col("node").as("dst"), col("scc_id").as("sb"))),
-          Seq("dst"))
-        .filter(col("sa") =!= col("sb"))
-        .select(col("sa"), col("sb")).distinct()
-        .localCheckpoint(true)
-      var lp = lifted.withColumn("dd", lit(1L)).localCheckpoint(true)
-      // sum of per-pair max path length: strictly increases until the
-      // max-plus fixpoint (max-agg per pair only grows; a new pair adds a
-      // positive term), so equality certifies convergence
-      def weight(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("dd")), lit(0L))).head.getLong(0)
-      var w = weight(lp)
-      var changed = true
-      while (changed) {
-        val step = lp.as("r1")
-          .join(lp.as("r2"), col("r1.sb") === col("r2.sa"))
-          .select(col("r1.sa").as("sa"), col("r2.sb").as("sb"),
-            (col("r1.dd") + col("r2.dd")).as("dd"))
-        val next = lp.union(step)
-          .groupBy(col("sa"), col("sb")).agg(max(col("dd")).as("dd"))
-          .localCheckpoint(true)
-        val w2 = weight(next)
-        changed = w2 != w
-        w = w2
-        lp = next
-      }
-      lp
-    }
+    def buildLp(): DataFrame = maxPlusClosure("dag_layers",
+      liftedEdges(edges0, scc).withColumn("w", lit(1L)))
     val lp = memoKey match {
       case Some(k) => layersMemo.computeIfAbsent(
         s"$k#layers${sessionSuffix(edges0.sparkSession)}",
@@ -1981,7 +1888,7 @@ object Graph {
     }
     scc.groupBy(col("scc_id")).agg(count(lit(1)).as("n_nodes"))
       .join(broadcast(lp.groupBy(col("sb").as("scc_id"))
-        .agg(max(col("dd")).as("in_depth"))), Seq("scc_id"), "left")
+        .agg(max(col("w")).as("in_depth"))), Seq("scc_id"), "left")
       .select(col("scc_id"), col("n_nodes"),
         coalesce(col("in_depth"), lit(0L)).as("layer"))
   }
@@ -2061,17 +1968,15 @@ object Graph {
     // logically an index read. Memoized per (graph, session) under the
     // layers#/2ec# discipline when the caller provides a key.
     def build(): DataFrame = {
-      var d = wedges.select(col("src").as("a"), col("dst").as("b"), col("w").as("d"))
-        .groupBy(col("a"), col("b")).agg(min(col("d")).as("d"))
-        .localCheckpoint(true)
-      (1 to rounds).foreach { _ =>
+      val d1 = Rounds.truncate(wedges
+        .select(col("src").as("a"), col("dst").as("b"), col("w").as("d"))
+        .groupBy(col("a"), col("b")).agg(min(col("d")).as("d")), eager = true)
+      Rounds.iterate("minplus", d1, rounds) { (d, _) =>
         val step = d.as("x").join(d.as("y"), col("x.b") === col("y.a"))
           .select(col("x.a").as("a"), col("y.b").as("b"),
             (col("x.d") + col("y.d")).as("d"))
-        d = d.unionAll(step).groupBy(col("a"), col("b")).agg(min(col("d")).as("d"))
-          .localCheckpoint(true)
+        d.unionAll(step).groupBy(col("a"), col("b")).agg(min(col("d")).as("d"))
       }
-      d
     }
     memoKey match {
       case Some(k) => layersMemo.computeIfAbsent(
@@ -2137,7 +2042,7 @@ object Graph {
     *
     * All |cand| removal subproblems run JOINTLY in one dataflow: the
     * seed is the edge list replicated per avoiding candidate
-    * (|cand|·|E| rows) and components close via [[keyedStars]] — the
+    * (|cand|·|E| rows) and components close via [[Dedup.keyedStars]] — the
     * large-star/small-star contraction keyed by the excluded node, so
     * state never exceeds the seed and rounds are O(log n). (The first
     * cut used closure DOUBLING here; on the sf0.1 chain graph that is
@@ -2187,85 +2092,13 @@ object Graph {
     case None => exclusionLabelsBuild(undirected0)
   }
 
-  /** Keyed large-star/small-star contraction: connected components of
-    * MANY edge sets at once — `pairs` carries (x, a, b) rows meaning
-    * "edge {a, b} belongs to subproblem x", and every star round is the
-    * q57 algorithm (Dedup.dedupClustersStars) with the subproblem key
-    * joined into each groupBy/join. Returns (x, node, m): the canonical
-    * (min-member) component label of every node that carries an edge in
-    * subproblem x. State stays O(|pairs|) through every round — stars
-    * CONTRACT edges, they never materialize reachability pairs — and
-    * rounds are O(log n); this is what replaced the closure-doubling
-    * kernel here after it went Σ|comp|³ on the sf0.1 chain graph (2.4B
-    * intermediate rows per round; the round-6 lesson: doubling is for
-    * DISTANCE-like state you must enumerate (q157 reach, q194 costs) —
-    * for "same component?" questions always contract, never close).
-    */
-  private def keyedStars(pairs: DataFrame, maxIters: Int = 30): DataFrame = {
-    var edges = pairs
-      .select(col("x"), greatest(col("a"), col("b")).as("a"),
-        least(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-
-    def largeStar(e: DataFrame): DataFrame = {
-      val both = e.select(col("x"), col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("x"), col("b").as("u"), col("a").as("v")))
-      val mins = both.groupBy(col("x"), col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("x"), col("u"), least(col("mn"), col("u")).as("m"))
-      both.join(mins, Seq("x", "u")).filter(col("v") > col("u"))
-        .select(col("x"), col("v").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-    }
-
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy(col("x"), col("a")).agg(min(col("b")).as("m"))
-      val linkNeighbors = e.join(mins, Seq("x", "a"))
-        .select(col("x"), col("b").as("n"), col("m"))
-      val linkSelf = mins.select(col("x"), col("a").as("n"), col("m"))
-      linkNeighbors.unionAll(linkSelf)
-        .filter(col("n") =!= col("m"))
-        .select(col("x"), greatest(col("n"), col("m")).as("a"),
-          least(col("n"), col("m")).as("b"))
-        .distinct()
-    }
-
-    var converged = false
-    var iter = 0
-    var sig = Option.empty[(Long, String)]
-    while (!converged && iter < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
-      // (count, Σhash) screens for the fixpoint; a match is CONFIRMED
-      // by one exact set check (canonical distinct frames with equal
-      // counts: empty difference ⟺ equal sets) so a 32-bit hash-sum
-      // collision cannot end the contraction on a non-star — the
-      // dedupClustersStars convergence rule
-      val row = next.agg(count(lit(1)),
-        sum(hash(col("x"), col("a"), col("b")).cast("decimal(38,0)"))).head()
-      val newSig = (row.getLong(0),
-        Option(row.get(1)).map(_.toString).getOrElse("0"))
-      converged = sig.contains(newSig) && next.exceptAll(edges).isEmpty
-      edges = next
-      sig = Some(newSig)
-      iter += 1
-    }
-    require(converged,
-      s"keyed star contraction did not converge in $maxIters rounds")
-    val children = edges.select(col("x"), col("a").as("node"), col("b").as("m"))
-    val roots = edges.select(col("x"), col("b").as("node")).distinct()
-      .join(children.select(col("x"), col("node")), Seq("x", "node"), "left_anti")
-      .select(col("x"), col("node"), col("node").as("m"))
-    children.unionByName(roots)
-  }
-
   /** The shared kernel: for every candidate x (≥2 distinct neighbors)
     * and every neighbor p of x, the canonical label (min member) of
     * p's connected component within N(x) under G∖{x} — the frame both
     * the articulation profile (distinct labels per x) and bridge
     * detection (singleton label classes) read out. All |cand| removal
     * subproblems run jointly: the seed is the |cand|·|E| broadcast
-    * product of edges avoiding each x, closed by [[keyedStars]] in
+    * product of edges avoiding each x, closed by [[Dedup.keyedStars]] in
     * O(log n) rounds with state never exceeding the seed size; labels
     * then canonicalize per (x, component) as the min NEIGHBOR of x in
     * that component (neighbors isolated in G∖{x} label themselves).
@@ -2289,7 +2122,7 @@ object Graph {
     val pairs = und.crossJoin(broadcast(cand))
       .filter(col("src") =!= col("x") && col("dst") =!= col("x"))
       .select(col("x"), col("src").as("a"), col("dst").as("b"))
-    val comps = keyedStars(pairs)
+    val comps = Dedup.starLabels(Dedup.keyedStars(pairs))
     val withComp = nb.select(col("x"), col("n").as("p"))
       .join(comps.select(col("x"), col("node").as("p"), col("m")),
         Seq("x", "p"), "left")
@@ -2881,83 +2714,8 @@ object Graph {
   def betweennessExact(undirected0: DataFrame,
       rootFilter: Option[org.apache.spark.sql.Column] = None,
       bipartite: Boolean = false): DataFrame = {
-    val und = undirected0.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    val nodes = und.select(col("src").as("node")).distinct()
-    val roots = rootFilter.fold(nodes)(f => nodes.filter(f))
-    // forward BFS: layer frames (root, node, d, sigma) kept for the
-    // backward sweep, each checkpointed (constant lineage per round).
-    // r16 (guide §2.3/§2.4): the old visited set was the lazy union of
-    // ALL layers, re-exchanged in full by every round's anti-join. A
-    // BFS frontier's neighbors can only land in layers d−1, d, d+1
-    // (per root: a layer-j node adjacent to a layer-d node with
-    // j ≤ d−2 would have pulled it into layer j+1 < d), so anti-joins
-    // against the LAST TWO layers are exactly equivalent — the
-    // early layers never need to touch the wire again. σ is summed
-    // BEFORE the anti-joins (anti-join drops whole (root, node) keys,
-    // so filter∘agg = agg∘filter): the push exchange gets map-side
-    // combine, and the agg output is hash-partitioned on (root, node)
-    // — the same partitioning the checkpointed layers carry — so both
-    // anti-joins plan exchange-free. One exchange per round total.
-    var layer = roots.select(col("node").as("root"), col("node"),
-        lit(0).as("d"), lit(1L).as("sigma"))
-      .repartition(col("root"), col("node"))
-      .localCheckpoint(true)
-    var prevLayer = Option.empty[DataFrame]
-    val layers = scala.collection.mutable.ArrayBuffer(layer)
-    var depth = 0
-    var frontierDone = false
-    while (!frontierDone) {
-      depth += 1
-      val push = layer.join(und, layer("node") === und("src"))
-        .select(col("root"), col("dst").as("node"), col("sigma"))
-      val agged = push.groupBy(col("root"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-      val afterPrev = prevLayer.fold(agged)(p => agged
-          .join(p.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-      // bipartite certificate: the same-layer anti is a provable no-op
-      // (layer parity = side parity), so it is skipped — see the doc
-      val next = (if (bipartite) afterPrev
-        else afterPrev
-          .join(layer.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-        .withColumn("d", lit(depth))
-        .select(col("root"), col("node"), col("d"), col("sigma"))
-        // lazy: isEmpty materializes what it needs now, later rounds
-        // fill the remaining partitions on first read — one job per
-        // round instead of checkpoint + isEmpty (r16)
-        .localCheckpoint(false)
-      frontierDone = next.isEmpty
-      if (!frontierDone) layers += next
-      prevLayer = Some(layer)
-      layer = next
-    }
-    // backward sweep, deepest layer first; delta(deepest) = 0.
-    // r16 round 2: σ rides the delta frame (no per-round re-join of
-    // layers(l+1) to fetch it) and the "nodes with no DAG successors
-    // keep delta 0" left join is FUSED with the contribution sum —
-    // layers(l) LEFT JOIN pushed-contribs, then the keyed agg
-    // (unmatched keys aggregate the single null term to null → 0):
-    // one join and one layer-sized exchange fewer per round, same
-    // groups, same per-group term multiset.
-    var delta = layers.last.select(col("root"), col("node"), col("sigma"),
-        lit(0.0).as("delta"))
-      .localCheckpoint(true)
-    val perLayerDeltas = scala.collection.mutable.ArrayBuffer(delta)
-    for (l <- (layers.size - 2) to 0 by -1) {
-      val pushed = delta.join(und, delta("node") === und("src"))
-        .select(col("root"), col("dst").as("node"),
-          col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      delta = layers(l).select(col("root"), col("node"), col("sigma"))
-        .join(pushed, Seq("root", "node"), "left")
-        .groupBy(col("root"), col("node"), col("sigma"))
-        .agg(coalesce(sum(col("sigma").cast("double") / col("sigma_w")
-          * (lit(1.0) + col("delta_w"))), lit(0.0)).as("delta"))
-      .localCheckpoint(true)
-      perLayerDeltas += delta
-    }
-    val all = perLayerDeltas.reduce(_ union _)
+    val (nodes, all) = brandes(undirected0, rootFilter, bipartite, lit(0.0),
+      col("sigma").cast("double") / col("sigma_w") * (lit(1.0) + col("delta_w")))
     nodes.join(
         all.filter(col("node") =!= col("root"))
           .groupBy(col("node"))
@@ -2984,90 +2742,8 @@ object Graph {
   def betweennessGridPpm(undirected0: DataFrame,
       rootFilter: Option[org.apache.spark.sql.Column] = None,
       bipartite: Boolean = false): DataFrame = {
-    val und = undirected0.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(true)
-    val nodes = und.select(col("src").as("node")).distinct()
-    val roots = rootFilter.fold(nodes)(f => nodes.filter(f))
-    // same forward-BFS discipline as [[betweennessExact]] (r16): σ
-    // aggregated before the anti-joins (map-side combine on the push
-    // exchange), visited checks against the last TWO layers only
-    // (provably equivalent — BFS neighbors land in layers d−1..d+1),
-    // so the per-round wire cost is the combined push plus at most
-    // one layer-sized anti side, never the whole visited union.
-    var layer = roots.select(col("node").as("root"), col("node"),
-        lit(0).as("d"), lit(1L).as("sigma"))
-      .repartition(col("root"), col("node"))
-      .localCheckpoint(true)
-    var prevLayer = Option.empty[DataFrame]
-    val layers = scala.collection.mutable.ArrayBuffer(layer)
-    var depth = 0
-    var frontierDone = false
-    while (!frontierDone) {
-      depth += 1
-      val push = layer.join(und, layer("node") === und("src"))
-        .select(col("root"), col("dst").as("node"), col("sigma"))
-      val agged = push.groupBy(col("root"), col("node"))
-        .agg(sum(col("sigma")).as("sigma"))
-      val afterPrev = prevLayer.fold(agged)(p => agged
-          .join(p.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-      // bipartite caller certificate: the same-layer anti is a provable
-      // no-op (layer parity = side parity — see betweennessExact), so
-      // skipping it removes a layer-sized exchange + SMJ per round
-      val nextPlan = (if (bipartite) afterPrev
-        else afterPrev
-          .join(layer.select(col("root"), col("node")), Seq("root", "node"),
-            "left_anti"))
-        .withColumn("d", lit(depth))
-        .select(col("root"), col("node"), col("d"), col("sigma"))
-      // plan evidence hook: the per-round plan is invisible in the
-      // final explain (layers are checkpoint-truncated), so a round's
-      // physical plan can be dumped for the plans/rNN files on demand
-      sys.env.get("GRAFT_BETW_PLAN_DIR").filter(_ => depth == 2)
-        .foreach { dir =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(dir, s"betweenness_round$depth.txt"),
-            nextPlan.queryExecution.explainString(
-              org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")).getBytes("UTF-8"))
-        }
-      // lazy: isEmpty materializes what it needs now, later rounds
-      // fill the remaining partitions on first read — one job per
-      // round instead of checkpoint + isEmpty (r16)
-      val next = nextPlan.localCheckpoint(false)
-      frontierDone = next.isEmpty
-      if (!frontierDone) layers += next
-      prevLayer = Some(layer)
-      layer = next
-    }
-    // layers.size - 1 = the max BFS eccentricity actually reached — the
-    // number the oracle's 6-layer unroll must dominate
-    lastRounds.put("betweenness_depth", layers.size - 1)
-    // backward sweep on the ppm grid, deepest layer first; δ'(deepest)=0.
-    // r16 round 2: the inner sigma_v join and the keep-delta-0 left
-    // join are FUSED — layers(l) LEFT JOIN the pushed contributions,
-    // then the keyed agg (unmatched keys aggregate one null term to
-    // null → 0; integer terms are order-free, so the per-group sum is
-    // bit-identical): one join and one layer-sized exchange fewer per
-    // round (guide §2.4).
-    var delta = layers.last.select(col("root"), col("node"),
-        col("sigma"), lit(0L).as("delta"))
-      .localCheckpoint(true)
-    val perLayerDeltas = scala.collection.mutable.ArrayBuffer(delta)
-    for (l <- (layers.size - 2) to 0 by -1) {
-      val pushed = delta.join(und, delta("node") === und("src"))
-        .select(col("root"), col("dst").as("node"),
-          col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      delta = layers(l).select(col("root"), col("node"), col("sigma"))
-        .join(pushed, Seq("root", "node"), "left")
-        .groupBy(col("root"), col("node"), col("sigma"))
-        .agg(coalesce(sum(expr(
-          "(sigma * (1000000 + delta_w)) div sigma_w")), lit(0L))
-          .as("delta"))
-        .localCheckpoint(true)
-      perLayerDeltas += delta
-    }
-    val all = perLayerDeltas.reduce(_ unionByName _)
+    val (nodes, all) = brandes(undirected0, rootFilter, bipartite, lit(0L),
+      expr("(sigma * (1000000 + delta_w)) div sigma_w"))
     nodes.join(
         all.filter(col("node") =!= col("root"))
           .groupBy(col("node"))
@@ -3075,6 +2751,80 @@ object Graph {
         Seq("node"), "left")
       .select(col("node"),
         expr("coalesce(dsum, CAST(0 AS BIGINT)) div 2").as("bc_ppm"))
+  }
+
+  /** The Brandes dataflow both betweenness forms share: the graph's
+    * nodes and every (root, node, sigma, delta) dependency row, with
+    * `term` one pushed dependency contribution over (sigma, sigma_w,
+    * delta_w) and `zero` the delta type's zero.
+    *
+    * Forward (r16, guide §2.3/§2.4): a BFS frontier's neighbors can only
+    * land in layers d−1, d, d+1 (per root: a layer-j node adjacent to a
+    * layer-d node with j ≤ d−2 would have pulled it into layer j+1 < d),
+    * so visited checks anti-join only the LAST TWO layers, never the
+    * whole visited union. σ is summed BEFORE the anti-joins (an
+    * anti-join drops whole (root, node) keys, so filter∘agg =
+    * agg∘filter): the push exchange gets map-side combine, and the agg
+    * output is hash-partitioned on (root, node) — the partitioning the
+    * checkpointed layers carry — so both anti-joins plan exchange-free.
+    * One exchange per round; layers are truncated lazily. The ledger
+    * key `betweenness_depth` records the max BFS eccentricity
+    * reached, the number the q177/q222 oracles' 6-layer unroll must
+    * dominate.
+    *
+    * Backward, deepest layer first with delta(deepest) = 0 (r16 round
+    * 2): σ rides the delta frame (no per-round re-join of layers(l+1)
+    * to fetch it), and the "nodes with no DAG successors keep delta 0"
+    * left join is FUSED with the contribution sum — layers(l) LEFT JOIN
+    * the pushed contributions, then the keyed agg (unmatched keys
+    * aggregate one null term to null → zero): one join and one
+    * layer-sized exchange fewer per round, same groups, same per-group
+    * term multiset.
+    */
+  private def brandes(undirected0: DataFrame,
+      rootFilter: Option[org.apache.spark.sql.Column], bipartite: Boolean,
+      zero: org.apache.spark.sql.Column, term: org.apache.spark.sql.Column)
+      : (DataFrame, DataFrame) = {
+    val und = Rounds.truncate(
+      undirected0.select(col("src"), col("dst")).distinct(), eager = true)
+    val nodes = und.select(col("src").as("node")).distinct()
+    val roots = rootFilter.fold(nodes)(f => nodes.filter(f))
+    val layer0 = Rounds.truncate(roots.select(col("node").as("root"),
+        col("node"), lit(0).as("d"), lit(1L).as("sigma"))
+      .repartition(col("root"), col("node")), eager = true)
+    val layers = Rounds.frontier("betweenness_depth", layer0) { seen =>
+      val layer = seen.last
+      val agged = layer.join(und, layer("node") === und("src"))
+        .select(col("root"), col("dst").as("node"), col("sigma"))
+        .groupBy(col("root"), col("node"))
+        .agg(sum(col("sigma")).as("sigma"))
+      val afterPrev = seen.lift(seen.size - 2).fold(agged)(p => agged
+          .join(p.select(col("root"), col("node")), Seq("root", "node"),
+            "left_anti"))
+      // bipartite certificate: the same-layer anti is a provable no-op
+      // (layer parity = side parity), so it is skipped — see the doc
+      (if (bipartite) afterPrev
+        else afterPrev
+          .join(layer.select(col("root"), col("node")), Seq("root", "node"),
+            "left_anti"))
+        .withColumn("d", lit(seen.size))
+        .select(col("root"), col("node"), col("d"), col("sigma"))
+    }
+    var delta = Rounds.truncate(layers.last.select(col("root"), col("node"),
+      col("sigma"), zero.as("delta")), eager = true)
+    val perLayerDeltas = scala.collection.mutable.ArrayBuffer(delta)
+    for (l <- (layers.size - 2) to 0 by -1) {
+      val pushed = delta.join(und, delta("node") === und("src"))
+        .select(col("root"), col("dst").as("node"),
+          col("sigma").as("sigma_w"), col("delta").as("delta_w"))
+      delta = Rounds.truncate(
+        layers(l).select(col("root"), col("node"), col("sigma"))
+          .join(pushed, Seq("root", "node"), "left")
+          .groupBy(col("root"), col("node"), col("sigma"))
+          .agg(coalesce(sum(term), zero).as("delta")), eager = true)
+      perLayerDeltas += delta
+    }
+    (nodes, perLayerDeltas.reduce(_ unionByName _))
   }
 
   /** Shared DuckDB replay of [[betweennessGridPpm]] over the q177/q222
@@ -3287,41 +3037,53 @@ object Graph {
       case None => closureFrames(edges0)
     }
     val sizes = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("sz"))
-    val direct = edges0.select(col("src"), col("dst")).distinct()
-    val lifted = direct
+    val lp = maxPlusClosure("critical_path", liftedEdges(edges0, scc)
+      .join(broadcast(sizes.select(col("scc_id").as("sb"), col("sz"))),
+        Seq("sb"))
+      .select(col("sa"), col("sb"), col("sz").as("w")))
+    sizes
+      .join(broadcast(lp.groupBy(col("sb").as("scc_id"))
+        .agg(max(col("w")).as("in_w"))), Seq("scc_id"), "left")
+      .select(col("scc_id"), col("sz").as("n_nodes"),
+        (col("sz") + coalesce(col("in_w"), lit(0L))).as("crit_w"))
+  }
+
+  /** Distinct condensation edges (sa, sb): the direct edges lifted to
+    * their SCC ids, intra-component edges dropped. `scc` is node-sized,
+    * so both lookups broadcast. */
+  private def liftedEdges(edges0: DataFrame, scc: DataFrame): DataFrame =
+    edges0.select(col("src"), col("dst")).distinct()
       .join(broadcast(scc.select(col("node").as("src"), col("scc_id").as("sa"))),
         Seq("src"))
       .join(broadcast(scc.select(col("node").as("dst"), col("scc_id").as("sb"))),
         Seq("dst"))
       .filter(col("sa") =!= col("sb"))
       .select(col("sa"), col("sb")).distinct()
-      .join(broadcast(sizes.select(col("scc_id").as("sb"), col("sz"))),
-        Seq("sb"))
-      .select(col("sa"), col("sb"), col("sz").as("w"))
-      .localCheckpoint(true)
-    var lp = lifted
+
+  /** Max-plus DOUBLING over weighted DAG edges (sa, sb, w > 0):
+    * P := max(P ∪ P∘P), `+` adding path weights and the max-agg
+    * deduplicating, to the all-pairs heaviest path in ⌈log₂ depth⌉
+    * rounds. Σ of the per-pair maxima strictly increases until the
+    * fixpoint (a pair's max only grows; a new pair adds a positive
+    * term), so an unchanged sum certifies convergence.
+    */
+  private def maxPlusClosure(name: String, weighted: DataFrame): DataFrame = {
+    val init = Rounds.truncate(weighted, eager = true)
     def total(df: DataFrame): Long =
       df.agg(coalesce(sum(col("w")), lit(0L))).head.getLong(0)
-    var t = total(lp)
-    var changed = true
-    while (changed) {
+    var t = total(init)
+    Rounds.fixpoint(name, init, eager = true) { lp =>
       val step = lp.as("r1")
         .join(lp.as("r2"), col("r1.sb") === col("r2.sa"))
         .select(col("r1.sa").as("sa"), col("r2.sb").as("sb"),
           (col("r1.w") + col("r2.w")).as("w"))
-      val next = lp.union(step)
+      lp.union(step)
         .groupBy(col("sa"), col("sb")).agg(max(col("w")).as("w"))
-        .localCheckpoint(true)
-      val t2 = total(next)
-      changed = t2 != t
-      t = t2
-      lp = next
+    } { (_, next) =>
+      val before = t
+      t = total(next)
+      t == before
     }
-    sizes
-      .join(broadcast(lp.groupBy(col("sb").as("scc_id"))
-        .agg(max(col("w")).as("in_w"))), Seq("scc_id"), "left")
-      .select(col("scc_id"), col("sz").as("n_nodes"),
-        (col("sz") + coalesce(col("in_w"), lit(0L))).as("crit_w"))
   }
 
   /** q223: weighted critical path per condensation component — the

@@ -664,8 +664,8 @@ object Scale {
     // broadcast (j, cid, cv) arrays, d = aggregate(zip_with(...)),
     // argmin over n·m·k rows. Identical exact integer sums in
     // s-order → identical codes, same oracle.
-    val gvj = gvj0.select(col("vec_id"), col("j"), col("gx"))
-      .localCheckpoint(true)
+    val gvj = Rounds.truncate(
+      gvj0.select(col("vec_id"), col("j"), col("gx")), eager = true)
     val vs = gvj
       .select(col("vec_id"), col("j"), posexplode(col("gx")).as(Seq("s", "x")))
     def carr(cents: org.apache.spark.sql.DataFrame) =
@@ -682,9 +682,9 @@ object Scale {
         .groupBy(col("vec_id"), col("j"))
         .agg(min(struct(col("d"), col("cid"))).as("mm"))
         .select(col("vec_id"), col("j"), col("mm.cid").as("code"))
-    var ce = vs.filter(col("vec_id") < codebookSize)
+    val seeds = vs.filter(col("vec_id") < codebookSize)
       .select(col("j"), col("vec_id").as("cid"), col("s"), col("x").as("c"))
-    for (_ <- 1 to iterations) {
+    val ce = Rounds.iterate("pq_kmeans", seeds, iterations) { (ce, _) =>
       // r16 round 2: the update re-joined the exploded components
       // against the assignment (vs ⋈ a — two exchanges per round); the
       // subvector array now rides THROUGH the argmin aggregate (gx is
@@ -692,15 +692,14 @@ object Scale {
       // the update re-explodes row-locally — the kmeansFramesGv
       // treatment per subspace. Same integer (d, cid) argmin structs,
       // same per-(j, cid, s) sum multisets → bit-identical codebooks.
-      val am = scored(ce)
+      scored(ce)
         .groupBy(col("vec_id"), col("j"))
         .agg(min(struct(col("d"), col("cid"))).as("mm"),
           first(col("gx")).as("gx"))
         .select(col("j"), col("mm.cid").as("code"), col("gx"))
-      ce = am.select(col("j"), col("code"), posexplode(col("gx")).as(Seq("s", "x")))
+        .select(col("j"), col("code"), posexplode(col("gx")).as(Seq("s", "x")))
         .groupBy(col("j"), col("code").as("cid"), col("s"))
         .agg(expr("CAST(sum(x) div count(1) AS LONG)").as("c"))
-        .localCheckpoint(true)
     }
     (ce, assign(ce))
   }

@@ -445,14 +445,14 @@ object Similarity {
     // callers (q81/q69/q160) an extra eager exchange+sort job; one
     // narrow checkpoint now serves both views. `ve` derives from the
     // checkpointed gv by posexplode — narrow, no second checkpoint.
-    val gv = vectors.select(col("vec_id"),
-        expr("transform(v, x -> CAST(ROUND(x * 1000000) AS LONG))").as("gx"))
-      .localCheckpoint(true)
+    val gv = Rounds.truncate(vectors.select(col("vec_id"),
+        expr("transform(v, x -> CAST(ROUND(x * 1000000) AS LONG))").as("gx")),
+      eager = true)
     val ve = gv.select(col("vec_id"), posexplode(col("gx")).as(Seq("i0", "x")))
       .select(col("vec_id"), (col("i0") + 1).as("i"), col("x"))
-    var ce = ve.filter(col("vec_id") < k)
+    val seeds = ve.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("i"), col("x").as("c"))
-    for (_ <- 1 to iterations) {
+    val ce = Rounds.iterate("kmeans", seeds, iterations) { (ce, _) =>
       // r16 round 2 (guide §2.4 — remove shuffles outright): the update
       // used to re-join the exploded frame against the assignment
       // (ve ⋈ a — two exchanges: n·dim rows + the n-row assignment) to
@@ -465,21 +465,10 @@ object Similarity {
       // exchanges fewer per training round at any scale; identical
       // integer assignment structs and identical per-(cluster, i) sum
       // multisets → bit-identical centroids (oracle unchanged).
-      val am = assignCarry(gv, ce)
-      val cePlan = am.select(col("cluster"), posexplode(col("gx")).as(Seq("i0", "x")))
+      assignCarry(gv, ce)
+        .select(col("cluster"), posexplode(col("gx")).as(Seq("i0", "x")))
         .groupBy(col("cluster").as("cid"), (col("i0") + 1).as("i"))
         .agg(expr("CAST(sum(x) div count(1) AS LONG)").as("c"))
-      // plan evidence hook (the betweenness round-dump idiom): the
-      // per-iteration update plan is invisible in the final explain
-      // (ce is checkpoint-truncated), so it can be dumped on demand
-      sys.env.get("GRAFT_KMEANS_PLAN_DIR").foreach { dir =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(dir, "kmeans_update_round.txt"),
-          cePlan.queryExecution.explainString(
-            org.apache.spark.sql.execution.ExplainMode.fromString(
-              "formatted")).getBytes("UTF-8"))
-      }
-      ce = cePlan.localCheckpoint(true)
     }
     (ve, gv, ce)
   }
@@ -951,8 +940,7 @@ object Similarity {
       .withColumn("rel", CosineSimilarity.cosineSim(col("v"), typedLit(queryVec)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var selected = Vector.empty[(Long, Seq[Double], Double, Int)]
-    var exhausted = false
-    for (rank <- 1 to k if !exhausted) {
+    Rounds.loop("mmr", k) { rank =>
       val div: org.apache.spark.sql.Column = selected.map(_._2) match {
         case Seq() => lit(0.0)
         case Seq(one) => CosineSimilarity.cosineSim(col("v"), typedLit(one))
@@ -968,11 +956,13 @@ object Similarity {
         .select(col("vec_id"), col("v"), col("score"))
         .collect()
       // corpus smaller than k: return what exists instead of throwing
-      if (top.isEmpty) exhausted = true
-      else selected = selected :+ ((top.head.getLong(0),
-        top.head.getSeq[Double](1), top.head.getDouble(2), rank))
+      top.isEmpty || {
+        selected = selected :+ ((top.head.getLong(0),
+          top.head.getSeq[Double](1), top.head.getDouble(2), rank))
+        false
+      }
     }
-    base.unpersist()
+    Rounds.release(base)
     selected.map(t => (t._1, t._4, t._3)).toDF("vec_id", "rank", "score")
   }
 
@@ -1011,14 +1001,12 @@ object Similarity {
       .withColumn("mind2", lit(null).cast("double"))
       .persist(lvl)
     var selected = Vector.empty[(Long, Double, Int)]
-    var exhausted = false
-    // r16: the parent frame is released one round LATE — each round's
-    // top-1 collect scans (and therefore fully caches) the current
-    // frame, so the former per-round count()-to-materialize job is
-    // redundant; the parent stays pinned until the child has been
-    // materialized by the NEXT round's collect.
+    // the parent frame is released one round LATE: each round's top-1
+    // collect scans (and therefore fully caches) the current frame —
+    // the Rounds release rule — so no count()-to-materialize job is
+    // needed; the parent stays pinned until the NEXT round's collect
     var parent = Option.empty[org.apache.spark.sql.DataFrame]
-    for (rank <- 1 to k if !exhausted) {
+    Rounds.loop("mmr_grid", k) { rank =>
       val top = cur
         .filter(!col("vec_id").isInCollection(selected.map(_._1)))
         .withColumn("score", lit(-7.0) * col("d2q") +
@@ -1027,10 +1015,9 @@ object Similarity {
         .limit(1)
         .select(col("vec_id"), col("v"), col("score"))
         .collect()
-      parent.foreach(_.unpersist()) // cur is materialized by the collect
+      Rounds.release(parent.toSeq: _*)
       parent = None
-      if (top.isEmpty) exhausted = true
-      else {
+      top.isEmpty || {
         val sv = top.head.getSeq[Double](1)
         selected = selected :+ ((top.head.getLong(0),
           top.head.getDouble(2), rank))
@@ -1041,10 +1028,10 @@ object Similarity {
           parent = Some(cur)
           cur = next
         }
+        false
       }
     }
-    parent.foreach(_.unpersist())
-    cur.unpersist()
+    Rounds.release(parent.toSeq :+ cur: _*)
     selected.map(t => (t._1, t._3, t._2.toLong))
       .toDF("vec_id", "rank", "score")
   }

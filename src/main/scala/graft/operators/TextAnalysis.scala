@@ -942,25 +942,23 @@ object TextAnalysis {
     val seedLog2 = if (maxCharCode(chars) <= 127) 3 else 0
     // largest raw seed value: 8 full base-128 digits, or one code point
     val seedMax = if (seedLog2 == 3) (1L << 56) - 1L else 0x10FFFFL
-    val seeded = chars
+    val seeded = Rounds.truncate(chars
       .select(col("doc_id"), col("pos"), asciiSeed(1 << seedLog2).as("r"))
-      .repartition(par, col("doc_id"))
-      .localCheckpoint(true)
+      .repartition(par, col("doc_id")), eager = true)
     val n = seeded.count()
     val width = n / buckets + 1L
-    var df = seeded
-    var seedRound = true
-    for (k <- (seedLog2 until maxLenLog2).map(1 << _)) {
-      // Round 1 pairs the RAW seeds (values up to seedMax) — its grid
-      // width must span the seed range; every later round's c1 is a
-      // global rank ≤ n.
-      val w = if (seedRound) seedMax / buckets + 1L else width
-      df = globalRank(
-        df.withColumn("c1", col("r"))
-          .withColumn("c2",
-            coalesce(lead(col("r"), k).over(byPos), lit(0L))),
-        w).localCheckpoint(true)
-      seedRound = false
+    val shifts = (seedLog2 until maxLenLog2).map(1 << _)
+    val df = Rounds.iterate("suffix_rank_doubling", seeded, shifts.size) {
+      (df, round) =>
+        // Round 1 pairs the RAW seeds (values up to seedMax) — its grid
+        // width must span the seed range; every later round's c1 is a
+        // global rank ≤ n.
+        val w = if (round == 1) seedMax / buckets + 1L else width
+        globalRank(
+          df.withColumn("c1", col("r"))
+            .withColumn("c2",
+              coalesce(lead(col("r"), shifts(round - 1)).over(byPos), lit(0L))),
+          w)
     }
     df.select(col("doc_id"), col("pos").cast("long").as("pos"),
       col("r").as("grank"))

@@ -48,14 +48,6 @@ object StreamingOps {
       .select(col("window.start").as("wstart"), col("window.end").as("wend"),
         col("event_type"), col("n"), col("total"))
 
-  /** Sliding window variant. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "10 minutes", "5 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("wstart"), col("n"))
-
   /** Session window (event-time gap) — streaming equivalent of q26. The
     * watermark defaults to the session gap: a lateness bound SHORTER than
     * the gap would split sessions the gap semantics still allow, and a
