@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** The reference pipeline's own operators (SURVEY.md §2.2 P1–P4) declared
   * as catalog queries over the testdata: envelope projection and protobuf
-  * round-trip. The file-source form of the same path lives in
-  * pipeline.EnvelopePipeline (exercised by EnvelopePipelineSpec with real
-  * temp files, including the unterminated-final-line case).
+  * round-trip. The streaming form of the same path is `graft-tail` →
+  * pipeline.EnvelopePipeline.encode → `graft-kinesis` (exercised by
+  * EnvelopePipelineSpec with real temp files, including the
+  * unterminated-final-line case).
   */
 object PipelineOps {
 

@@ -20,7 +20,7 @@ final case class ProducerConfig(
     // Capping the exponent (50ms << 6 = 3.2 s) keeps a failing partition
     // task responsive so the flush deadline / task retry can take over.
     maxBackoffExponent: Int = 6,
-    // Bound on sink-side drain (foreachBatch partition + DSv2 commit):
+    // Bound on the sink's per-task drain (KinesisDataWriter.commit):
     // records still undelivered at the deadline fail the task → Spark
     // task retry replays the epoch (at-least-once, same class as the
     // reference's requeue-at-back).

@@ -1,28 +1,21 @@
 package graft.pipeline
 
 import graft.functions.ProtoWire
-import graft.model.{Envelope, LogMessage}
+import graft.model.Envelope
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The reference's data path (SURVEY.md §2.2, main.go:229-347) as a
-  * declarative Spark pipeline:
+/** The reference's data path (SURVEY.md §2.2, main.go:229-347) as one
+  * streaming transform between the `graft-tail` source and the
+  * `graft-kinesis` sink:
   *
-  *   P1 line framing   → `text` source (one row per line; Spark strips the
-  *                       trailing newline, the projection re-appends it for
-  *                       byte-exact protobuf parity — main.go:231 keeps it).
-  *                       DELTA: Hadoop's line reader strips \r\n and lone
-  *                       \r too, so CRLF files re-frame as \n-terminated
-  *                       here; the graft-tail source splits on \n ONLY
-  *                       (keeping the \r in the payload) and is the
-  *                       byte-exact path for CRLF input.
-  *   P2 envelope proj  → narrow `select` / typed map (fused by codegen)
+  *   P1 line framing   → `graft-tail` (one row per line, split on \n only;
+  *                       the source strips the newline, `encode`
+  *                       re-appends it for byte-exact protobuf parity —
+  *                       main.go:231 keeps it)
+  *   P2 envelope proj  → typed map through `Envelope.forLogLine`
   *   P3 proto encode   → ProtoWire in a typed map (no UDF-boxing per field)
-  *   P4 partition key  → source file path column (main.go:346)
-  *
-  * Batch and streaming share the same projection: the batch form reads
-  * `spark.read.text`, the streaming form `spark.readStream.text` — the plan
-  * below them is identical, which is the point of building on DataFrames.
+  *   P4 partition key  → the source file path (main.go:346)
   */
 object EnvelopePipeline {
 
@@ -44,33 +37,28 @@ object EnvelopePipeline {
     }
   }
 
-  /** Reader options for a `root/**/glob` watch: Hadoop globs treat `**`
-    * as a single path segment, so the reference's recursive walk +
-    * basename match (filepath.Walk + filepath.Match(fglob, basename),
-    * main.go:291-313) maps to `recursiveFileLookup=true` +
-    * `pathGlobFilter=<glob>` — pathGlobFilter matches file names only,
-    * exactly like filepath.Match.
+  /** P1–P4 over graft-tail's `(value, path)` frame: one
+    * `(data BINARY, partition_key STRING)` row per line, the
+    * `graft-kinesis` sink's input shape. The file path is both the
+    * envelope's `source_instance` and the record's key; it comes from the
+    * source's `path` column, never Spark's input-file-name expression,
+    * which DSv2 sources leave empty. `ingest_ns` carries nanosecond ingest time like
+    * main.go:331; Spark has no nanosecond clock expression, so micros×1000
+    * is the honest equivalent (documented delta: trailing 3 zeros).
     */
-  val RecursiveLookup: Map[String, String] = Map("recursiveFileLookup" -> "true")
-
-  /** P2 + P4 as columnar expressions over a `value: STRING` line
-    * DataFrame (works identically on batch and streaming frames).
-    * `ingest_ns` carries nanosecond ingest time like main.go:331; Spark
-    * has no nanosecond clock expression, so micros×1000 is the honest
-    * equivalent (documented delta: trailing 3 zeros).
-    */
-  def project(lines: DataFrame, origin: String): DataFrame =
-    lines.select(
+  def encode(lines: DataFrame, origin: String): DataFrame = {
+    implicit val s: SparkSession = lines.sparkSession
+    serialize(toEnvelopes(lines.select(
       lit(origin).as("origin"),
-      lit("LogMessage").as("event_type"),
       concat(col("value"), lit("\n")).cast("binary").as("message"),
-      lit("OUT").as("message_type"),
       (unix_micros(current_timestamp()) * 1000).as("ingest_ns"),
-      lit("bosh").as("source_type"),
-      input_file_name().as("source_instance"),
-      input_file_name().as("partition_key"))
+      col("path").as("source_instance"))))
+      .toDF("data", "partition_key")
+  }
 
-  /** Typed envelope rows from the projected frame. */
+  /** Typed envelope rows from an `(origin, message, ingest_ns,
+    * source_instance)` frame.
+    */
   def toEnvelopes(projected: DataFrame)(implicit s: SparkSession): Dataset[Envelope] = {
     import s.implicits._
     projected.map { r =>
@@ -89,33 +77,4 @@ object EnvelopePipeline {
       (ProtoWire.encode(e), e.logMessage.map(_.source_instance).getOrElse(""))
     }
   }
-
-  /** Full batch path: text files → envelopes → wire bytes + key. */
-  def batch(spark: SparkSession, paths: Seq[String], origin: String): Dataset[(Array[Byte], String)] = {
-    implicit val s: SparkSession = spark
-    serialize(toEnvelopes(project(spark.read.textFile(paths: _*).toDF("value"), origin)))
-  }
-
-  /** One implementation for both watch forms: the reader differs, the
-    * options (RecursiveLookup + basename glob) and projection are shared.
-    */
-  private def watch(load: (Map[String, String], String) => DataFrame,
-      pattern: String, origin: String): Option[DataFrame] =
-    parseWatchPattern(pattern).map { case (root, glob) =>
-      project(load(RecursiveLookup + ("pathGlobFilter" -> glob), root), origin)
-    }
-
-  /** Streaming source over a watch pattern (S3/S5 semantics): Spark's file
-    * source re-lists the glob every micro-batch — new files are discovered
-    * exactly like the reference's 60s WatchDir rescan, with the listing
-    * interval = trigger interval.
-    */
-  def stream(spark: SparkSession, pattern: String, origin: String): Option[DataFrame] =
-    watch((opts, root) => spark.readStream.format("text").options(opts)
-      .load(root).toDF("value"), pattern, origin)
-
-  /** Batch form of the same watch semantics (used by specs and backfills). */
-  def batchWatch(spark: SparkSession, pattern: String, origin: String): Option[DataFrame] =
-    watch((opts, root) => spark.read.format("text").options(opts)
-      .load(root).toDF("value"), pattern, origin)
 }

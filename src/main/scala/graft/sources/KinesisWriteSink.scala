@@ -2,36 +2,42 @@ package graft.sources
 
 import java.util
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.streaming.ReportsSinkMetrics
 import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.pipeline.{BatchProducer, KinesisClient, ProducerConfig, PutRecordsResult, RecordResult, KinesisRecord}
+import graft.pipeline.{BatchProducer, KinesisClient, ProducerConfig}
 
-/** DSv2 StreamingWrite sink with the reference's producer semantics —
-  * the M5.2 upgrade from `foreachBatch` (SURVEY.md §7): each partition
-  * task runs a [[BatchProducer]] (K1–K7) and the epoch commit carries the
-  * delivery stats. Delivery is at-least-once under task retry, the same
+/** DSv2 StreamingWrite sink with the reference's producer semantics
+  * (SURVEY.md §7, M5.2): each partition task runs a [[BatchProducer]]
+  * (K1–K7) and the epoch commit carries the delivery stats. Delivery is at-least-once under task retry, the same
   * semantic class as the reference's requeue-at-back.
   *
   * Client injection: DSv2 options are strings, so the sink looks its
   * client factory up by name in [[KinesisClientRegistry]] — production
   * registers an AWS-SDK-backed factory once per JVM; tests register
   * capturing fakes (the same seam as the reference's logProducer,
-  * main.go:349-369). The default "accept" client acknowledges everything
-  * (the reference's mock behavior).
+  * main.go:349-369). `client` is required: a sink that silently
+  * acknowledged and discarded every record would hide a missing option.
+  *
+  * Delivery counters (A1) reach the progress events as sink metrics
+  * (`progress.sink.metrics`: `sent`, `dropped`, `errors`, totals for the
+  * query run), which [[graft.streaming.FirehoseMetricsListener]] exposes
+  * under the reference's Prometheus names.
   *
   * Usage:
   * {{{
-  *   serialized  // (data BINARY, partition_key STRING)
+  *   EnvelopePipeline.encode(lines, origin)  // (data BINARY, partition_key STRING)
   *     .writeStream.format("graft-kinesis")
-  *     .option("client", "accept")
+  *     .option("client", "aws")
   *     .option("checkpointLocation", ...)
   *     .start()
   * }}}
@@ -56,8 +62,7 @@ object KinesisWriteSink {
   * register via their own initialization, e.g. a SparkPlugin).
   */
 object KinesisClientRegistry {
-  private val factories = TrieMap[String, () => KinesisClient](
-    "accept" -> (() => new AcceptAllClient))
+  private val factories = TrieMap[String, () => KinesisClient]()
 
   def register(name: String, factory: () => KinesisClient): Unit =
     factories.put(name, factory)
@@ -69,16 +74,16 @@ object KinesisClientRegistry {
           s"(known: ${factories.keys.mkString(", ")})"))
 }
 
-/** Accepts every record (the reference's manual-run mock behavior). */
-final class AcceptAllClient extends KinesisClient {
-  override def putRecords(records: Seq[KinesisRecord]): PutRecordsResult =
-    PutRecordsResult(None, Seq.fill(records.size)(RecordResult()))
-}
-
 private[sources] class KinesisTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsWrite {
-  override def name(): String =
-    s"graft-kinesis(${options.getOrDefault("client", "accept")})"
+    extends Table with SupportsWrite with ReportsSinkMetrics {
+  private val clientName = Option(options.get("client")).getOrElse(
+    throw new IllegalArgumentException("graft-kinesis requires option 'client'"))
+  // delivery totals of every committed epoch of this query run (one
+  // table per run), replaced whole so a progress report never sees a
+  // torn set
+  @volatile private var delivered = KinesisCommit(0, 0, 0)
+
+  override def name(): String = s"graft-kinesis($clientName)"
   override def schema(): StructType = KinesisWriteSink.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.STREAMING_WRITE)
@@ -86,42 +91,44 @@ private[sources] class KinesisTable(options: CaseInsensitiveStringMap)
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toStreaming: StreamingWrite =
-          new KinesisStreamingWrite(
-            options.getOrDefault("client", "accept"),
+          new KinesisStreamingWrite(clientName,
             ProducerConfig(
-              batchSize = options.getOrDefault("batchSize", "500").toInt,
-              bufferSize = options.getOrDefault("bufferSize", "5000").toInt,
-              maxAttemptsPerRecord =
-                options.getOrDefault("maxAttemptsPerRecord", "5").toInt,
-              initialBackoffMillis =
-                options.getOrDefault("initialBackoffMillis", "50").toLong,
               // the commit deadline MUST be raisable per sink: a slow but
               // healthy endpoint that needs >30 s per epoch would
               // otherwise livelock on task retry with no knob to turn
               flushTimeoutMillis =
-                options.getOrDefault("flushTimeoutMillis", "30000").toLong))
+                options.getOrDefault("flushTimeoutMillis", "30000").toLong),
+            commitEpoch)
       }
     }
+
+  private def commitEpoch(messages: Array[WriterCommitMessage]): Unit = synchronized {
+    delivered = messages.collect { case k: KinesisCommit => k }.foldLeft(delivered)(_ + _)
+  }
+
+  override def metrics(): util.Map[String, String] = {
+    val d = delivered
+    Map("sent" -> d.sent, "dropped" -> d.dropped, "errors" -> d.requestErrors)
+      .map { case (k, v) => k -> v.toString }.asJava
+  }
 }
 
 private[sources] final case class KinesisCommit(
-    sent: Long, dropped: Long, requestErrors: Long) extends WriterCommitMessage
+    sent: Long, dropped: Long, requestErrors: Long) extends WriterCommitMessage {
+  def +(o: KinesisCommit): KinesisCommit =
+    KinesisCommit(sent + o.sent, dropped + o.dropped, requestErrors + o.requestErrors)
+}
 
-private[sources] class KinesisStreamingWrite(
-    clientName: String, config: ProducerConfig) extends StreamingWrite {
+private[sources] class KinesisStreamingWrite(clientName: String,
+    config: ProducerConfig, onCommit: Array[WriterCommitMessage] => Unit)
+    extends StreamingWrite {
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new KinesisWriterFactory(clientName, config)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val sent = messages.collect { case k: KinesisCommit => k.sent }.sum
-    val dropped = messages.collect { case k: KinesisCommit => k.dropped }.sum
-    if (dropped > 0)
-      // the reference logs drops too (batchproducer.go:347); the commit
-      // hook is where a metrics sink would record them
-      System.err.println(s"[graft-kinesis] epoch $epochId: sent=$sent dropped=$dropped")
-  }
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    onCommit(messages)
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }

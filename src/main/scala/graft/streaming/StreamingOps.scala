@@ -367,8 +367,16 @@ class UserTotalsProcessor extends StatefulProcessor[Long, StreamEvent, UserSessi
 
 /** A2–A4: the reference's 5s stats emission + Prometheus-name metrics
   * (main.go:27-47,147-152) mapped onto StreamingQueryListener progress
-  * events. Counters accumulate per query run; `snapshot` exposes them
-  * under the reference's metric names.
+  * events, exposed by `snapshot` under the reference's metric names.
+  *
+  * The delivery counters come from the `graft-kinesis` sink's metrics
+  * (`progress.sink.metrics`): records the service acknowledged, records
+  * dropped after their retries (K5/K6) and request-level errors (K4) —
+  * never rows read. The sink reports totals per query run, so a run's
+  * latest report replaces its previous one (a repeated report changes
+  * nothing; idle triggers post no progress event at all) and the
+  * snapshot sums the runs: a restarted query keeps counting from where
+  * the last run stopped.
   *
   * `queryName`: restrict accumulation to one named query — a session
   * listener sees EVERY streaming query's progress, and with more than
@@ -379,26 +387,34 @@ final class FirehoseMetricsListener(
     instance: String, queryName: Option[String] = None)
     extends StreamingQueryListener {
   // listener-bus delivery is single-threaded, but snapshot() readers race
-  // the updates — guard the trio so a scrape never sees a torn pair
+  // the updates — guard the state so a scrape never sees a torn set
   private val lock = new Object
-  private var rowsIn = 0L
+  // per query run: (sent, dropped, errors) as the sink last reported them
+  private val delivered = scala.collection.mutable.Map[java.util.UUID, (Long, Long, Long)]()
   private var rowsPerSec = 0.0
   private var batches = 0L
 
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-    if (queryName.forall(_ == e.progress.name)) lock.synchronized {
-      rowsIn += e.progress.numInputRows
-      rowsPerSec = e.progress.processedRowsPerSecond
+    val p = e.progress
+    if (queryName.forall(_ == p.name)) lock.synchronized {
+      val m = p.sink.metrics
+      if (m.containsKey("sent"))
+        delivered(p.runId) =
+          (m.get("sent").toLong, m.get("dropped").toLong, m.get("errors").toLong)
+      rowsPerSec = p.processedRowsPerSecond
       batches += 1
     }
   }
 
   /** Reference metric names, labeled by `system` = instance (main.go:32-46). */
   def snapshot: Map[String, Double] = lock.synchronized {
+    val runs = delivered.values
     Map(
-      s"""firehose_to_kinesis_sent_count{system="$instance"}""" -> rowsIn.toDouble,
+      s"""firehose_to_kinesis_sent_count{system="$instance"}""" -> runs.map(_._1).sum.toDouble,
+      s"""firehose_to_kinesis_dropped_count{system="$instance"}""" -> runs.map(_._2).sum.toDouble,
+      s"""firehose_to_kinesis_errors_count{system="$instance"}""" -> runs.map(_._3).sum.toDouble,
       s"""firehose_to_kinesis_rows_per_sec{system="$instance"}""" -> rowsPerSec,
       s"""firehose_to_kinesis_batches{system="$instance"}""" -> batches.toDouble)
   }

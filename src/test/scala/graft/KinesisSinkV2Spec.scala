@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{FakeKinesisClient, KinesisClient, KinesisRecord, PutRecordsResult, RecordResult}
+import graft.pipeline.{KinesisClient, KinesisRecord, PutRecordsResult, RecordResult}
 import graft.sources.KinesisClientRegistry
 
 /** The DSv2 StreamingWrite path: MemoryStream → graft-kinesis sink with a
@@ -44,6 +44,22 @@ class KinesisSinkV2Spec extends AnyFunSuite {
       captured.forEach(r => keys += r.partitionKey)
       assert(keys.sorted === Seq("k1", "k1", "k2"))
     } finally q.stop()
+  }
+
+  test("a query started without the client option fails naming the option") {
+    implicit val s = spark
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import s.implicits._
+    val in = MemoryStream[(Array[Byte], String)]
+    val e = intercept[Exception] {
+      val q = in.toDF().toDF("data", "partition_key")
+        .writeStream.format("graft-kinesis")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft-kv2-noclient").toString)
+        .start()
+      try { in.addData(("a".getBytes, "k1")); q.processAllAvailable() } finally q.stop()
+    }
+    assert(e.getMessage.contains("graft-kinesis requires option 'client'"), e.getMessage)
   }
 
   test("unknown client name fails fast with the known names") {

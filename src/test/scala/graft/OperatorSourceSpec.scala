@@ -4,10 +4,12 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Source-level guards on the operator layer: operators read no
-  * environment or system properties (behavior switches belong in
-  * parameters, not hidden debug branches), and dead iterative rounds
-  * are released only through the `Rounds` seam.
+/** Source-level guards: operators read no environment or system
+  * properties (behavior switches belong in parameters, not hidden debug
+  * branches), dead iterative rounds are released only through the
+  * `Rounds` seam, and the tail → Kinesis path keeps its one shape (the
+  * file path from the source's column, delivery through the DSv2 sink,
+  * counts through its sink metrics).
   */
 class OperatorSourceSpec extends AnyFunSuite {
   private def scalaFiles(dir: String): Seq[Path] = {
@@ -36,6 +38,19 @@ class OperatorSourceSpec extends AnyFunSuite {
       scalaFiles("src/main/scala").filterNot(f =>
         Set("Rounds.scala", "GraftBridge.scala")(f.getFileName.toString)),
       Seq("checkpointRdd", "freeCheckpoint"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("pipeline and sources call neither input_file_name nor foreachBatch") {
+    // input_file_name silently returns "" on DSv2 sources such as graft-tail
+    val found = hits(
+      scalaFiles("src/main/scala/graft/pipeline") ++ scalaFiles("src/main/scala/graft/sources"),
+      Seq("input_file_name", "foreachBatch"))
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("sources report through metrics, never System.err.println") {
+    val found = hits(scalaFiles("src/main/scala/graft/sources"), Seq("System.err.println"))
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

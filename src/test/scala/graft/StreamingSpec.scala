@@ -15,6 +15,43 @@ class StreamingSpec extends AnyFunSuite {
   private def ev(id: Long, minute: Int, uid: Long, typ: String = "click", v: Double = 1.0) =
     StreamEvent(id, ts(minute), uid, typ, v)
 
+  /** A registered client name whose fakes acknowledge every record. */
+  private def acceptingClient(): String = {
+    val name = s"accept-${java.util.UUID.randomUUID()}"
+    graft.sources.KinesisClientRegistry.register(name,
+      () => new graft.pipeline.FakeKinesisClient())
+    name
+  }
+
+  /** Starts `(data, partition_key)` rows into the graft-kinesis sink. */
+  private def toKinesis(df: org.apache.spark.sql.DataFrame, client: String,
+      name: String): org.apache.spark.sql.streaming.StreamingQuery =
+    df.toDF("data", "partition_key").writeStream.format("graft-kinesis")
+      .queryName(name).option("client", client)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory(s"graft-$name").toString)
+      .start()
+
+  /** The listener's snapshot once its sent count reached `atLeast`
+    * (listener events are async) or 10 s passed.
+    */
+  private def awaitSent(listener: FirehoseMetricsListener, instance: String,
+      atLeast: Long): Map[String, Double] = {
+    val key = s"""firehose_to_kinesis_sent_count{system="$instance"}"""
+    val deadline = System.currentTimeMillis() + 10000
+    while (listener.snapshot(key) < atLeast && System.currentTimeMillis() < deadline)
+      Thread.sleep(50)
+    listener.snapshot
+  }
+
+  /** GET /metrics: (status, content type, body). */
+  private def scrape(http: MetricsHttpServer): (Int, String, String) = {
+    val url = new java.net.URI(s"http://127.0.0.1:${http.boundPort}/metrics").toURL
+    val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+    val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
+    (conn.getResponseCode, conn.getContentType, body)
+  }
+
   test("tumbling window counts (complete mode over MemoryStream)") {
     implicit val s = spark
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -263,18 +300,15 @@ class StreamingSpec extends AnyFunSuite {
     import s.implicits._
     val listener = new FirehoseMetricsListener("node-1")
     spark.streams.addListener(listener)
-    val in = MemoryStream[StreamEvent]
-    val q = in.toDF().writeStream.format("memory").queryName("mx").start()
+    val in = MemoryStream[(Array[Byte], String)]
+    val q = toKinesis(in.toDF(), acceptingClient(), "mx")
     try {
-      in.addData(ev(1, 0, 1), ev(2, 1, 1), ev(3, 2, 1))
+      in.addData(("a".getBytes, "k1"), ("b".getBytes, "k2"), ("c".getBytes, "k1"))
       q.processAllAvailable()
-      // listener events are async; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (listener.snapshot.values.sum == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      val snap = listener.snapshot
-      assert(snap.keys.exists(_.startsWith("firehose_to_kinesis_sent_count")))
-      assert(snap("""firehose_to_kinesis_sent_count{system="node-1"}""") >= 3.0)
+      val snap = awaitSent(listener, "node-1", 3)
+      assert(snap("""firehose_to_kinesis_sent_count{system="node-1"}""") === 3.0)
+      assert(snap("""firehose_to_kinesis_dropped_count{system="node-1"}""") === 0.0)
+      assert(snap("""firehose_to_kinesis_errors_count{system="node-1"}""") === 0.0)
     } finally { q.stop(); spark.streams.removeListener(listener) }
   }
 
@@ -337,25 +371,97 @@ class StreamingSpec extends AnyFunSuite {
     val listener = new FirehoseMetricsListener("web/0")
     spark.streams.addListener(listener)
     val http = new MetricsHttpServer(() => listener.snapshot, port = 0)
-    val in = MemoryStream[StreamEvent]
-    val q = in.toDF().writeStream.format("memory").queryName("mxh").start()
+    val in = MemoryStream[(Array[Byte], String)]
+    val q = toKinesis(in.toDF(), acceptingClient(), "mxh")
     try {
-      in.addData(ev(1, 0, 1), ev(2, 1, 1))
+      in.addData(("a".getBytes, "k1"), ("b".getBytes, "k2"))
       q.processAllAvailable()
-      val deadline = System.currentTimeMillis() + 10000
-      while (listener.snapshot.values.sum == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      val url = new java.net.URI(
-        s"http://127.0.0.1:${http.boundPort}/metrics").toURL
-      val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
-      val body = new String(conn.getInputStream.readAllBytes(), "UTF-8")
-      assert(conn.getResponseCode === 200)
-      assert(conn.getContentType.startsWith("text/plain"))
+      awaitSent(listener, "web/0", 2)
+      val (status, contentType, body) = scrape(http)
+      assert(status === 200)
+      assert(contentType.startsWith("text/plain"))
       assert(body.contains("# TYPE firehose_to_kinesis_sent_count gauge"))
-      assert(body.linesIterator.exists(l =>
-        l.startsWith("firehose_to_kinesis_sent_count{system=\"web/0\"}") &&
-          l.split(' ').last.toDouble >= 2.0))
+      assert(body.linesIterator.contains("firehose_to_kinesis_sent_count{system=\"web/0\"} 2"))
     } finally { q.stop(); http.close(); spark.streams.removeListener(listener) }
+  }
+
+  test("/metrics reports what the sink delivered, dropped and retried under scripted failures") {
+    import graft.pipeline.{FakeKinesisClient, KinesisClient, KinesisRecord, PutRecordsResult, RecordResult}
+    val no = RecordResult("ProvisionedThroughputExceededException", "throttled")
+    val ok = RecordResult()
+    // one sequential task per epoch (one file), so one shared script:
+    // epoch 1 (5 lines): a request error, then 3 acked and 2 failing
+    // 5 times (K6 drops them); epoch 2 (3 lines): 2 acked, 1 dropped
+    val fake = new FakeKinesisClient(
+      Seq(PutRecordsResult(Some("InternalFailure"), Nil),
+        PutRecordsResult(None, Seq(no, no, ok, ok, ok))) ++
+      Seq.fill(4)(PutRecordsResult(None, Seq(no, no))) ++
+      Seq(PutRecordsResult(None, Seq(no, ok, ok))) ++
+      Seq.fill(4)(PutRecordsResult(None, Seq(no))))
+    val clientName = s"scripted-${java.util.UUID.randomUUID()}"
+    graft.sources.KinesisClientRegistry.register(clientName, () => new KinesisClient {
+      override def putRecords(records: Seq[KinesisRecord]): PutRecordsResult =
+        fake.synchronized(fake.putRecords(records))
+    })
+    val root = java.nio.file.Files.createTempDirectory("graft-mx-scripted").toAbsolutePath
+    val log = root.resolve("app.log")
+    def append(lines: String*): Unit =
+      java.nio.file.Files.writeString(log, lines.map(_ + "\n").mkString,
+        java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
+
+    val listener = new FirehoseMetricsListener("web/0", Some("mx_scripted"))
+    spark.streams.addListener(listener)
+    val http = new MetricsHttpServer(() => listener.snapshot, port = 0)
+    val idleKey = "spark.sql.streaming.noDataProgressEventInterval"
+    val idlePrev = spark.conf.getOption(idleKey)
+    spark.conf.set(idleKey, "100") // report idle triggers every 100 ms
+    val lines = spark.readStream.format("graft-tail")
+      .option("path", root.toString).option("glob", "*.log").load()
+    val q = graft.pipeline.EnvelopePipeline.encode(lines, "web/0")
+      .writeStream.format("graft-kinesis").queryName("mx_scripted")
+      .option("client", clientName)
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-mx-ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    def series(body: String, name: String): Double =
+      body.linesIterator.collectFirst {
+        case l if l.startsWith(s"""firehose_to_kinesis_$name{system="web/0"} """) =>
+          l.split(' ').last.toDouble
+      }.getOrElse(fail(s"no $name series in:\n$body"))
+    try {
+      append("a1", "a2", "a3", "a4", "a5")
+      q.processAllAvailable()
+      awaitSent(listener, "web/0", 3)
+      append("b1", "b2", "b3")
+      q.processAllAvailable()
+      awaitSent(listener, "web/0", 5)
+      val acked = fake.synchronized(fake.allSentRecords.size)
+      assert(acked === 5)
+
+      // idle triggers (no new lines) report progress but must not move
+      // the counters
+      val drained = listener.snapshot
+      val t0 = java.time.Instant.now()
+      def idle = q.recentProgress.count(p =>
+        p.numInputRows == 0 && java.time.Instant.parse(p.timestamp).isAfter(t0))
+      val deadline = System.currentTimeMillis() + 10000
+      while (idle < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      assert(idle >= 2, "no idle trigger was reported")
+      assert(listener.snapshot === drained)
+
+      val (status, _, body) = scrape(http)
+      assert(status === 200)
+      assert(series(body, "sent_count") === acked.toDouble)
+      assert(series(body, "dropped_count") === 3.0)
+      assert(series(body, "errors_count") === 1.0)
+    } finally {
+      q.stop(); http.close(); spark.streams.removeListener(listener)
+      idlePrev match {
+        case Some(v) => spark.conf.set(idleKey, v)
+        case None => spark.conf.unset(idleKey)
+      }
+    }
   }
 
   test("timer sessionizer closes sessions when the watermark passes the gap") {
